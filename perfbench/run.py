@@ -476,9 +476,13 @@ def main() -> int:
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     os.makedirs(out_dir, exist_ok=True)
-    # Spark's and Python's scratch space stay inside the checkout
-    os.environ["SPARK_LOCAL_DIRS"] = os.environ["TMPDIR"] = os.path.join(work, "tmp")
-    os.makedirs(os.environ["TMPDIR"])
+    # Spark's, the JVM's and Python's scratch space stay inside the checkout
+    tmp = os.path.join(work, "tmp")
+    os.makedirs(tmp)
+    os.environ["SPARK_LOCAL_DIRS"] = os.environ["TMPDIR"] = tmp
+    os.environ["JAVA_TOOL_OPTIONS"] = " ".join(
+        filter(None, [os.environ.get("JAVA_TOOL_OPTIONS"), f"-Djava.io.tmpdir={tmp}"])
+    )
 
     context = {"probe_before_s": cpu_probe(), "cpus": os.cpu_count(),
                "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS")}

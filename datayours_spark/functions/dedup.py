@@ -537,15 +537,17 @@ def minhash_dedup(
     return jaccard_pairs(cand, docs).where(F.col("jaccard") >= threshold)
 
 
-def _observed_or_count(obs, key: str, df: DataFrame, timeout: float = 60.0):
+def _observed_or_count(obs, key: str, df: DataFrame, timeout: float = 5.0):
     """Read an :class:`Observation` metric that should already be
     available (its action just completed), guarded so a hang cannot
     occur: ``Observation.get`` blocks indefinitely when the
     materializing action was not tracked as a SQL execution (ADVICE r15
     — classic-mode-only pattern, sensitive to ``localCheckpoint`` no
-    longer running as a tracked action).  On timeout fall back to
-    ``df.count()`` — one cheap job over the just-checkpointed blocks."""
+    longer running as a tracked action).  On timeout warn and fall back
+    to ``df.count()`` — one cheap job over the just-checkpointed
+    blocks."""
     import threading as _th
+    import warnings
 
     box: dict = {}
 
@@ -559,6 +561,12 @@ def _observed_or_count(obs, key: str, df: DataFrame, timeout: float = 60.0):
     t.join(timeout)
     if "v" in box:
         return int(box["v"][key])
+    warnings.warn(
+        f"Observation metric {key!r} not available after {timeout}s; "
+        "falling back to df.count()",
+        RuntimeWarning,
+        stacklevel=2,
+    )
     return int(df.count())
 
 

@@ -155,12 +155,7 @@ def spread_scan(df: DataFrame) -> DataFrame:
     this a NO-OP for corpora already delivered in >= cores splits — no
     corpus-scale shuffle is ever introduced.  Only safe for consumers
     whose values are row-local or exact (integer/count) aggregates;
-    float-mean consumers keep their scan order.
-
-    ``DATAYOURS_NO_SPREAD=1`` disables the spread (measurement knob for
-    the scale A/B in tools/confab.py; production default is on)."""
-    if os.environ.get("DATAYOURS_NO_SPREAD", "") == "1":
-        return df
+    float-mean consumers keep their scan order."""
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism
     if df.rdd.getNumPartitions() < par:
@@ -262,42 +257,88 @@ def sf_dir_from_env() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
 
 
-#: resolved-relation cache: (applicationId, sf_dir, name) → DataFrame.
-#: A DataFrame is an immutable logical plan over a point-in-time file
-#: listing, so reuse is exact for the static testdata tables this function
-#: serves — and it removes the per-call footer/schema-inference job
-#: (~0.1-0.2 s each, measured), which at 50+ bench queries was a large
-#: slice of the fixed per-query floor.  Keyed by applicationId so a new
-#: session never sees another session's plans.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
+#: the engine's one session cache, see :func:`session_cached`:
+#: (applicationId, sf_dir, table, part) → (input identity, value)
+_SESSION_CACHE: dict[tuple, tuple] = {}
+_session_cache_lock = threading.Lock()
+
+
+def _input_identity(sf_dir: str, table: str) -> tuple | None:
+    """(mtime, length) of ``{sf_dir}/{table}.parquet`` from one metadata
+    stat — no Spark job.  None when the path cannot be stat-ed locally
+    (a remote store); such entries then live as long as their session."""
+    try:
+        st = os.stat(f"{sf_dir}/{table}.parquet")
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size)
+
+
+def session_cached(
+    spark: SparkSession, sf_dir: str, table: str, part, build,
+    checkpoint: bool = False,
+):
+    """Return ``part`` — a relation, index table or model state derived
+    from ``{sf_dir}/{table}.parquet`` — building it on a miss.
+
+    Key rule: an entry answers only the applicationId, ``sf_dir``,
+    table and part it was built for, and only while the table's input
+    identity (mtime and length) is unchanged, so a rewritten table is
+    rebuilt on its next use.  Invalidation rule: every call drops the
+    entries of other applicationIds (their checkpointed DataFrames die
+    with their SparkContext).
+
+    ``checkpoint=True`` marks a DataFrame part: ``build(materialize)``
+    is called with True and the result pinned by
+    ``localCheckpoint(eager=True)``.  DATAYOURS_NO_INDEX_CACHE=1 (plan
+    inspection, and the recompute reference in tests) bypasses such
+    parts on read and write and returns ``build(False)``, the full
+    lineage.  Other parts (lazy table relations, driver-side model
+    state) are cached either way: ``build()`` takes no argument."""
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, sf_dir, table, part)
+    ident = _input_identity(sf_dir, table)
+    bypass = checkpoint and os.environ.get("DATAYOURS_NO_INDEX_CACHE") == "1"
+    with _session_cache_lock:
+        for k in [k for k in _SESSION_CACHE if k[0] != app_id]:
+            del _SESSION_CACHE[k]
+        hit = None if bypass else _SESSION_CACHE.get(key)
+    if hit is not None and hit[0] == ident:
+        return hit[1]
+    if bypass:
+        return build(False)
+    value = build(True).localCheckpoint(eager=True) if checkpoint else build()
+    with _session_cache_lock:
+        _SESSION_CACHE[key] = (ident, value)
+    return value
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table; nano-timestamp columns gain a ``<col>_sec``
     BIGINT epoch-seconds companion (floor division, matching DuckDB's
-    nanos→micros truncation then epoch extraction).  Resolved relations
-    are cached per session (static tables; see _TABLE_CACHE)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    configure_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for col in NANO_TS_COLUMNS.get(name, []):
-        dtype = dict(df.dtypes)[col]
-        if dtype == "bigint":
-            # TIMESTAMP(NANOS) read as long nanos: integer floor division
-            # (positive epochs) — exact, identical to DuckDB's
-            # epoch_us(ts)//1e6 after its nanos→micros truncation
-            df = df.withColumn(f"{col}_sec", F.expr(f"{col} div {NANOS_PER_SECOND}"))
-        else:
-            # TIMESTAMP(MICROS) reads as timestamp_ntz; with the session in
-            # UTC, unix_seconds over a plain-timestamp cast is the same epoch
-            df = df.withColumn(
-                f"{col}_sec", F.expr(f"unix_seconds(cast({col} as timestamp))")
-            )
-    _TABLE_CACHE[key] = df
-    return df
+    nanos→micros truncation then epoch extraction).  The resolved
+    relation is session-cached: reuse skips the per-call footer/schema
+    inference job (~0.1-0.2 s each, measured)."""
+
+    def build() -> DataFrame:
+        configure_session(spark)
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        for col in NANO_TS_COLUMNS.get(name, []):
+            if dict(df.dtypes)[col] == "bigint":
+                # TIMESTAMP(NANOS) read as long nanos: integer floor
+                # division (positive epochs) — exact, identical to
+                # DuckDB's epoch_us(ts)//1e6 after its nanos→micros
+                # truncation
+                sec = F.expr(f"{col} div {NANOS_PER_SECOND}")
+            else:
+                # TIMESTAMP(MICROS) reads as timestamp_ntz; with the
+                # session in UTC, unix_seconds over a plain-timestamp
+                # cast is the same epoch
+                sec = F.expr(f"unix_seconds(cast({col} as timestamp))")
+            df = df.withColumn(f"{col}_sec", sec)
+        return df
+
+    return session_cached(spark, sf_dir, name, "relation", build)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

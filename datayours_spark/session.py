@@ -14,47 +14,72 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(
-    app_name: str = "datayours-spark",
-    cpus: int | None = None,
-    driver_memory: str | None = None,
-) -> SparkSession:
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
-    master = f"local[{cpus}]" if cpus else "local[*]"
-    shuffle = os.environ.get("DATAYOURS_SHUFFLE_PARTITIONS", "32")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+def engine_conf() -> dict[str, str]:
+    """The engine's session conf.  ``get_spark`` launches with all of it;
+    ``configure_session`` sets the runtime-mutable part (every key not in
+    ``LAUNCH_ONLY``) on a session the engine was handed."""
+    return {
+        "spark.sql.shuffle.partitions": os.environ.get(
+            "DATAYOURS_SHUFFLE_PARTITIONS", "32"
+        ),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # Respect the advisory partition size when coalescing instead of
         # stopping at defaultParallelism (the Spark SQL tuning guide's
         # own recommendation for this knob).  parallelismFirst=true keeps
         # one shuffle partition per core no matter how small the data —
         # on the 17 MB sf fixtures that is 32 near-empty tasks per
-        # exchange, pure scheduling (measured −49%% across a rollup/
+        # exchange, pure scheduling (measured −49% across a rollup/
         # render/join bench sample when disabled); at cluster scale the
         # advisory size (64 MB) is exactly the 'fewer, larger reduce
         # partitions' shape guide §2.2 calls for.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("DATAYOURS_AQE_PARALLELISM_FIRST", "false"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+        # required to read TIMESTAMP(NANOS) testdata columns
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # push large IN lists to the parquet reader as real in-filters
         # (row-group min/max checked per value) instead of the default
         # >10-values fallback to a single [min,max] range, which is
         # vacuous for hash-valued probe sets spanning the key space —
         # the dedup maintainers' literal h probes (<=1024 values, h-
         # sorted compacted files) skip almost every row group this way
-        .config("spark.sql.parquet.pushdown.inFilterThreshold", "2048")
+        "spark.sql.parquet.pushdown.inFilterThreshold": "2048",
+    }
+
+
+#: confs set only when the engine launches the session: static ones, and
+#: ones a handed-in session keeps as its owner set them
+LAUNCH_ONLY = frozenset({
+    "spark.sql.adaptive.coalescePartitions.enabled",
+    "spark.sql.execution.arrow.pyspark.enabled",
+    "spark.ui.enabled",
+    "spark.ui.showConsoleProgress",
+})
+
+
+def engine_builder(
+    app_name: str = "datayours-spark", cpus: int | None = None
+) -> SparkSession.Builder:
+    """A ``local[cpus]`` session builder carrying :func:`engine_conf`
+    (``cpus`` defaults to SPARK_GRAFT_CPUS, else all cores)."""
+    if cpus is None:
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
+    master = f"local[{cpus}]" if cpus else "local[*]"
+    return (
+        SparkSession.builder.appName(app_name).master(master)
+        .config(map=engine_conf())
     )
+
+
+def get_spark(
+    app_name: str = "datayours-spark",
+    cpus: int | None = None,
+    driver_memory: str | None = None,
+) -> SparkSession:
+    builder = engine_builder(app_name, cpus)
     if driver_memory:
         # only effective when this call launches the JVM (local mode: the
         # driver heap IS the executor heap)
@@ -63,26 +88,14 @@ def get_spark(
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine configs to an externally-created session.
+    """Apply the runtime-settable engine confs to an externally-created
+    session.
 
     The driver hands us its own SparkSession; these confs are all
-    runtime-mutable so we can adopt it safely.  nanosAsLong is required to
-    read the testdata parquet (TIMESTAMP(NANOS) columns).
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        os.environ.get("DATAYOURS_AQE_PARALLELISM_FIRST", "false"),
-    )
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # a plain-default session carries 200 shuffle partitions — far too many
-    # for these per-series workloads; AQE coalesces from this hint upward
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("DATAYOURS_SHUFFLE_PARTITIONS", "32"),
-    )
-    # real in-filter pushdown for large literal IN probes (rationale at
-    # the get_spark twin of this conf); runtime-mutable
-    spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "2048")
+    runtime-mutable so we can adopt it safely.  A plain-default session
+    carries 200 shuffle partitions — far too many for these per-series
+    workloads; AQE coalesces from the engine's hint upward."""
+    for key, value in engine_conf().items():
+        if key not in LAUNCH_ONLY:
+            spark.conf.set(key, value)
     return spark

@@ -1,20 +1,27 @@
-"""Session index caches: a cache hit must be bit-identical to a fresh
-recompute (DATAYOURS_NO_INDEX_CACHE=1 bypasses the caches on READ and
-write, building the full lineage).
+"""The registry's session cache (``io.session_cached``).
 
-ADVICE r4 flagged the original bypass test as vacuous: the helpers
-consulted the cache before checking the env var, so the "fresh" run
-returned the already-cached DataFrames and the equality could never
-fail.  The helpers now gate the cache READ on `_df_cache_enabled()`;
-`test_bypass_ignores_poisoned_cache` proves it by planting a wrong
-DataFrame in the cache and checking the bypass run doesn't serve it.
+A cache hit must be bit-identical to a fresh recompute
+(DATAYOURS_NO_INDEX_CACHE=1 bypasses checkpointed parts on READ and
+write, building the full lineage).  ADVICE r4 flagged the original bypass
+test as vacuous: the helpers consulted the cache before checking the env
+var, so the "fresh" run returned the already-cached DataFrames and the
+equality could never fail.  `test_bypass_ignores_poisoned_cache` proves
+the bypass by planting a wrong DataFrame in the cache and checking the
+bypass run doesn't serve it.
+
+The key rule (applicationId + sf_dir + the table's input identity +
+part) and the invalidation rule (every call drops other applicationIds'
+entries) are pinned by the rewrite and foreign-session tests.
 """
 
 import os
+import shutil
 
+import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as E
+from datayours_spark import io
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -49,11 +56,12 @@ def test_bypass_ignores_poisoned_cache(spark):
     fn = E.queries()["q_span_mask"]
     truth = sorted(map(tuple, fn(spark, SF_DIR).collect()))
     app_id = spark.sparkContext.applicationId
-    key = (app_id, SF_DIR, E.SPAN_K, E.SPAN_MIN_TOKENS)
-    real = E._SPAN_CACHE.get(key)
+    key = (app_id, SF_DIR, "documents", ("spans", E.SPAN_K, E.SPAN_MIN_TOKENS))
+    real = io._SESSION_CACHE.get(key)
     assert real is not None, "q_span_mask should have populated the cache"
-    poison = real.where("doc_id < 0")  # empty spans => all-zero masks
-    E._SPAN_CACHE[key] = poison
+    ident, spans = real
+    poison = spans.where("doc_id < 0")  # empty spans => all-zero masks
+    io._SESSION_CACHE[key] = (ident, poison)
     try:
         poisoned = sorted(map(tuple, fn(spark, SF_DIR).collect()))
         assert poisoned != truth, (
@@ -67,4 +75,54 @@ def test_bypass_ignores_poisoned_cache(spark):
             os.environ.pop("DATAYOURS_NO_INDEX_CACHE", None)
         assert fresh == truth
     finally:
-        E._SPAN_CACHE[key] = real
+        io._SESSION_CACHE[key] = real
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_rewritten_table_is_rebuilt(spark, tmp_path):
+    """Rewriting documents.parquet under the same sf_dir inside one
+    session: the relation and the signature index built from the old
+    file must not be served — results match a never-cached directory
+    holding the new file."""
+    src = f"{SF_DIR}/documents.parquet"
+    live, ref = tmp_path / "live", tmp_path / "ref"
+    live.mkdir()
+    ref.mkdir()
+    shutil.copy(src, live / "documents.parquet")
+    fn = E.queries()["q_dedup_minhash"]
+    before = _rows(fn(spark, str(live)))
+    assert io.load_table(spark, str(live), "documents").count() == 500
+
+    # the new file drops 100 docs and turns every odd doc into a copy of
+    # its even neighbour's text: pairs the old signatures cannot find
+    docs = pq.read_table(src).to_pandas()
+    docs = docs[docs.doc_id < 400].reset_index(drop=True)
+    odd = docs.doc_id % 2 == 1
+    docs.loc[odd, "text"] = docs["text"].shift(1)[odd]
+    for d in (live, ref):
+        docs.to_parquet(d / "documents.parquet", index=False)
+
+    assert io.load_table(spark, str(live), "documents").count() == len(docs)
+    after = _rows(fn(spark, str(live)))
+    assert after == _rows(fn(spark, str(ref)))
+    assert after != before
+
+
+def test_foreign_session_entries_dropped(spark):
+    """Entries of another applicationId (a stopped session) are dropped
+    by the next call, whatever table or part it asks for."""
+    foreign = ("app-stopped", SF_DIR, "documents", "relation")
+    io._SESSION_CACHE[foreign] = (None, object())
+    io.load_table(spark, SF_DIR, "region")
+    app_id = spark.sparkContext.applicationId
+    assert io._SESSION_CACHE
+    assert all(k[0] == app_id for k in io._SESSION_CACHE)
+
+
+def test_emb_dim_names_partless_dir(tmp_path):
+    (tmp_path / "embeddings.parquet").mkdir()
+    with pytest.raises(ValueError, match="embeddings.parquet"):
+        E._emb_dim(str(tmp_path))

@@ -1269,3 +1269,33 @@ class TestWinnowDecontaminate:
         )
         with _pytest.raises(ValueError):
             winnow_decontaminate(docs, docs, denom="nope")
+
+
+def test_observed_or_count_falls_back_and_warns():
+    """An Observation whose ``get`` never returns must not stall the
+    caller: the count fallback answers within the timeout and warns."""
+    import threading
+    import time
+
+    from datayours_spark.functions.dedup import _observed_or_count
+
+    release = threading.Event()
+
+    class _HungObservation:
+        @property
+        def get(self):
+            release.wait()
+            return {"n": -1}
+
+    class _Counted:
+        def count(self):
+            return 7
+
+    t0 = time.perf_counter()
+    try:
+        with pytest.warns(RuntimeWarning, match="df.count"):
+            n = _observed_or_count(_HungObservation(), "n", _Counted())
+    finally:
+        release.set()
+    assert n == 7
+    assert time.perf_counter() - t0 < 10.0

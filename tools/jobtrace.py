@@ -38,31 +38,16 @@ def main() -> None:
         print("usage: jobtrace.py q_name [q_name ...]", file=sys.stderr)
         raise SystemExit(2)
     evdir = tempfile.mkdtemp(prefix="jobtrace_ev_")
-    from pyspark.sql import SparkSession
+    from datayours_spark.session import engine_builder
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
-    master = f"local[{cpus}]" if cpus else "local[*]"
     registry = entrymod.queries()
-    # mirror datayours_spark.session.get_spark, plus event logging
-    spark = (
-        SparkSession.builder.appName("datayours-jobtrace")
-        .master(master)
-        .config("spark.sql.shuffle.partitions",
-                os.environ.get("DATAYOURS_SHUFFLE_PARTITIONS", "32"))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.pushdown.inFilterThreshold", "2048")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
+    # the engine's session conf, plus event logging
+    spark = engine_builder("datayours-jobtrace").config(map={
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": evdir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }).getOrCreate()
     sc = spark.sparkContext
     registry["q_tally_minmax"](spark, bench.SF_DIR).count()
     registry["q_text_stats"](spark, bench.SF_DIR).count()

@@ -263,8 +263,8 @@ def main() -> None:
     # line contract is identical in both modes.  Fresh-mode full
     # output lands in BENCH_LOCAL_FULL_FRESH.json so a measurement run
     # never clobbers the round's committed single-session capture;
-    # the back-to-back delta is documented in README "Measured
-    # context".
+    # the back-to-back delta is documented in
+    # MEASURED_LEDGER_2026-10-17.md.
     fresh_per_group = "--fresh-session-per-group" in sys.argv[1:]
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     probe_before = _cpu_probe_sec()

@@ -12,11 +12,15 @@ instead of the HTTP endpoints:
 - `find(query)` / `expand(query)` / `index()` — the /metrics endpoints.
 
 Scale notes: one distributed plan serves ALL matched series (the reference
-loops per leaf): matched paths × generated time grid, left-joined against
-LWW slots — filters push to the scan, the grid never leaves executors, and
-the result is bounded by len(paths) × slots like the reference's
-points-per-query cap.  Only the final render text assembly is driver-side,
-exactly as CGI response assembly was.
+loops per leaf).  A render collects its matched leaf list ONCE — one
+filter over the series catalog, at most ``max_points + 1`` rows — and
+never scans the catalog again: the cap arithmetic reads the list's length,
+the fetch filters the datapoints on ``path IN (list)`` plus the ts range
+(both reach the parquet scan), and the dense leaves × slots grid is a
+JVM-side literal left-joined against the LWW slots.  The result is
+bounded by ``max_points`` like the reference's points-per-query cap, so it
+is collected unsorted and ordered on the driver, where the render text is
+assembled exactly as CGI response assembly was.
 """
 
 from __future__ import annotations
@@ -26,8 +30,13 @@ from pyspark.sql import functions as F
 
 from datayours_spark.kernel.timeparse import default_render_range, parse_time
 from datayours_spark.operators.align import apply_null_policy
-from datayours_spark.operators.catalog import find_nodes, series_catalog
-from datayours_spark.operators.fetch import lww_slots, time_grid
+from datayours_spark.operators.catalog import (
+    collect_leaf_paths,
+    find_leaf_paths,
+    find_nodes,
+    series_catalog,
+)
+from datayours_spark.operators.fetch import lww_slots, slot_sequence
 from datayours_spark.render.formats import fetched_to_series, render_csv, render_json
 
 def find(
@@ -115,17 +124,27 @@ def render_grid(
     """The distributed heart of /render: (path, slot, value) dense grids for
     every leaf matched by any target, nulls where no point landed.
 
+    The matched leaves are resolved with one collect
+    (:func:`~datayours_spark.operators.catalog.collect_leaf_paths`: every
+    target's leaf condition OR-ed into one catalog filter), and the list
+    drives the rest: the fetch filters on ``path IN (list)`` and the
+    ts range, which reach the parquet scan; the dense grid is one literal
+    (``explode`` over the path array, then the slot ``sequence``)
+    left-joined to the LWW slots; ``apply_null_policy`` fills the nulls.
+    No target matching a leaf gives an empty (path, slot, value) frame.
+
     ``max_points`` bounds the result to len(matched leaves) × slot count —
     the reference's points-per-query guard (`dataMineServer maxpoints`,
-    SURVEY §2.4 O4) applied BEFORE anything materializes: the leaf count is
-    one tiny catalog aggregation, the slot count is arithmetic.  The default
-    is the reference's own default bound (10080, a week of minutes —
-    `L_DataBaseDM.lua:74`); pass ``None`` to disable, a larger int to raise.
-    On overflow, ``on_exceed='coarsen'`` multiplies the step by the smallest
-    integer factor that fits (Graphite's maxDataPoints consolidation),
-    re-checking the post-quantization slot count until the bound truly holds;
-    ``'error'`` raises :class:`RenderCapExceeded` — so an over-wide glob can
-    never drown the driver at collect time.
+    SURVEY §2.4 O4) applied BEFORE anything materializes: the leaf collect
+    stops at ``max_points + 1`` rows, the slot count is arithmetic.  The
+    default is the reference's own default bound (10080, a week of minutes
+    — `L_DataBaseDM.lua:74`); pass ``None`` to disable, a larger int to
+    raise.  On overflow, ``on_exceed='coarsen'`` multiplies the step by the
+    smallest integer factor that fits (Graphite's maxDataPoints
+    consolidation), re-checking the post-quantization slot count until the
+    bound truly holds; ``'error'`` raises :class:`RenderCapExceeded`.  More
+    leaves than ``max_points`` raise in either mode.  So the bounded result
+    is safe to collect and order on the driver.
     """
     import time as _time
 
@@ -136,33 +155,39 @@ def render_grid(
     frm = default_from if from_ is None else parse_time(from_, now=now_ts)
     until = default_until if until_ is None else parse_time(until_, now=now_ts)
 
-    catalog = series_catalog(datapoints)
-    leaves = None
-    for t in targets:
-        nodes = find_nodes(catalog, t).where(F.col("is_leaf")).select("path")
-        leaves = nodes if leaves is None else leaves.unionByName(nodes)
-    leaves = leaves.dropDuplicates(["path"])
+    paths = collect_leaf_paths(
+        series_catalog(datapoints), targets,
+        None if max_points is None else max_points + 1,
+    )
+    if not paths:
+        return spark.createDataFrame([], "path string, slot bigint, value double")
 
     if max_points is not None:
-        n_leaves = leaves.count()
+        if len(paths) > max_points:
+            raise RenderCapExceeded(
+                f"more than {max_points} matched leaves alone exceed "
+                f"max_points={max_points}; narrow the glob"
+            )
         n_slots = (until - until % step) // step - (frm - frm % step) // step + 1
-        if n_leaves * n_slots > max_points:
+        if len(paths) * n_slots > max_points:
             if on_exceed == "error":
                 raise RenderCapExceeded(
-                    f"{n_leaves} leaves x {n_slots} slots exceeds "
+                    f"{len(paths)} leaves x {n_slots} slots exceeds "
                     f"max_points={max_points}; narrow the glob or range"
                 )
-            step = coarsen_step(step, frm, until, n_leaves, max_points)
+            step = coarsen_step(step, frm, until, len(paths), max_points)
 
     lo = frm - frm % step
     hi = until - until % step
-    slots = (
-        lww_slots(
-            datapoints.where(F.col("ts_sec").between(lo, hi + step - 1)), step
-        )
-        .join(F.broadcast(leaves), "path")
+    slots = lww_slots(
+        datapoints.where(
+            F.col("path").isin(paths) & F.col("ts_sec").between(lo, hi + step - 1)
+        ),
+        step,
     )
-    grid = leaves.crossJoin(time_grid(spark, frm, until, step))
+    grid = spark.range(1).select(F.explode(F.lit(paths)).alias("path")).select(
+        "path", F.explode(slot_sequence(frm, until, step)).alias("slot")
+    )
     out = grid.join(slots, ["path", "slot"], "left")
     return apply_null_policy(out, null_policy, partition_cols=["path"]).select(
         "path", "slot", "value"
@@ -210,26 +235,18 @@ def render_mixed(
     frm = default_from if from_ is None else parse_time(from_, now=now_ts)
     until = default_until if until_ is None else parse_time(until_, now=now_ts)
 
-    from datayours_spark.operators.catalog import find_leaf_paths
-
     # target resolution: the matched leaf list parameterizes per-spec
     # routing, so it ends up on the driver either way.
     # - catalog injected (stats table or plain path list): resolve
     #   DRIVER-side via find_leaf_paths (differential-tested against the
     #   distributed find_nodes) — with a path list this plans zero Spark
     #   jobs; a stats-table DataFrame costs one KB-scale collect.
-    # - catalog=None: the distributed find — the glob pushes into the
-    #   distinct scan as an rlike filter, so only MATCHED leaves ever
-    #   reach the driver (a selective pattern over a huge catalog must
-    #   not collect the whole path set; review finding, round 4).
+    # - catalog=None: the distributed collect_leaf_paths — the globs push
+    #   into the distinct scan as one filter, so only MATCHED leaves (at
+    #   most max_leaves + 1 of them) ever reach the driver.
     if catalog is None:
-        cat = series_catalog(datapoints)
-        leaves = None
-        for t in targets:
-            nodes = find_nodes(cat, t).where(F.col("is_leaf")).select("path")
-            leaves = nodes if leaves is None else leaves.unionByName(nodes)
-        paths = sorted(
-            {r["path"] for r in leaves.dropDuplicates(["path"]).collect()}
+        paths = collect_leaf_paths(
+            series_catalog(datapoints), targets, max_leaves + 1
         )
     else:
         if isinstance(catalog, DataFrame):
@@ -243,9 +260,9 @@ def render_mixed(
         )
     if len(paths) > max_leaves:
         raise RenderCapExceeded(
-            f"{len(paths)} matched leaves exceeds max_leaves={max_leaves}"
+            f"more than max_leaves={max_leaves} matched leaves"
         )
-    return mixed_fetch(spark, datapoints, engine, sorted(paths), frm, until, now_ts)
+    return mixed_fetch(spark, datapoints, engine, paths, frm, until, now_ts)
 
 
 def render(
@@ -277,9 +294,9 @@ def render(
     if format == "json":
         return render_json(fetched_to_series(grid))
     if format == "csv":
-        rows = [
-            (r["path"], r["slot"], r["value"])
-            for r in grid.orderBy("path", "slot").collect()
-        ]
+        rows = sorted(
+            ((r["path"], r["slot"], r["value"]) for r in grid.collect()),
+            key=lambda row: row[:2],
+        )
         return render_csv(rows)
     raise ValueError(f"unknown render format {format!r}")

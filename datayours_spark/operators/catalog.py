@@ -55,15 +55,42 @@ def find_leaf_paths(paths, pattern: str) -> list[str]:
     )
 
 
-def _match_condition(pattern: str) -> tuple[F.Column, int]:
+def _match_condition(pattern: str, col: str = "prefix") -> tuple[F.Column, int]:
     """OR of per-expansion regexes over the first-N-level prefix; returns
-    (condition on `prefix` column, n_levels)."""
+    (condition on the `col` column, n_levels)."""
     n_levels = len(expand_braces(pattern)[0].split("."))
     regexes = glob_path_to_regex(pattern)
-    cond = F.col("prefix").rlike(regexes[0])
+    cond = F.col(col).rlike(regexes[0])
     for r in regexes[1:]:
-        cond = cond | F.col("prefix").rlike(r)
+        cond = cond | F.col(col).rlike(r)
     return cond, n_levels
+
+
+def collect_leaf_paths(
+    catalog: DataFrame, targets: list[str], limit: int | None = None
+) -> list[str]:
+    """Distributed leaf resolution for a target list: the sorted distinct
+    leaf paths matched by ANY target — the union of
+    ``find_nodes(catalog, t).where(is_leaf)`` over `targets`
+    (differential-tested), as one filter and one collect.
+
+    A leaf of an N-level pattern is a path of exactly N levels that the
+    pattern's regex matches, so each target contributes
+    ``size(split(path)) == N AND path RLIKE ...`` and the targets OR
+    together; the filter runs below the catalog's distinct, at the scan.
+    ``limit`` caps the collected rows, so a caller bounding the match
+    count (``limit = bound + 1``) never pulls an over-wide glob's whole
+    leaf set to the driver.
+    """
+    cond = None
+    for t in targets:
+        matched, n = _match_condition(t, "path")
+        leaf = (F.size(F.split("path", "\\.")) == n) & matched
+        cond = leaf if cond is None else cond | leaf
+    leaves = catalog.where(cond).select("path")
+    if limit is not None:
+        leaves = leaves.limit(limit)
+    return sorted({r["path"] for r in leaves.collect()})
 
 
 def find_nodes(catalog: DataFrame, pattern: str) -> DataFrame:

@@ -46,6 +46,16 @@ def lww_slots(datapoints: DataFrame, step: int, order_col: str = "ts_us") -> Dat
     )
 
 
+def slot_sequence(from_time: int, until_time: int, step: int) -> Column:
+    """The slots [quantize(from), quantize(until)] inclusive, as one
+    array column (`explode` it for one row per slot)."""
+    lo = from_time - from_time % step
+    hi = until_time - until_time % step
+    return F.sequence(
+        F.lit(lo).cast("long"), F.lit(hi).cast("long"), F.lit(step).cast("long")
+    )
+
+
 def time_grid(
     spark: SparkSession, from_time: int, until_time: int, step: int
 ) -> DataFrame:
@@ -53,15 +63,8 @@ def time_grid(
 
     Generated with `sequence`+`explode` — stays on executors, no driver loop.
     """
-    lo = from_time - from_time % step
-    hi = until_time - until_time % step
     return spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.lit(lo).cast("long"), F.lit(hi).cast("long"),
-                F.lit(step).cast("long"),
-            )
-        ).alias("slot")
+        F.explode(slot_sequence(from_time, until_time, step)).alias("slot")
     )
 
 

@@ -158,9 +158,11 @@ def find_completer(nodes: list[tuple[str, str, bool]]) -> dict:
 
 
 def fetched_to_series(grid: DataFrame) -> list[tuple[str, list[tuple[int, float | None]]]]:
-    """Collect a (path, slot, value) grid into render_json input, ordered."""
-    rows = grid.orderBy("path", "slot").collect()
+    """Collect a (path, slot, value) grid into render_json input, ordered
+    by (path, slot) on the driver: the grid is render-sized, and Python's
+    str order is Spark's binary UTF-8 string order, so no distributed sort
+    runs."""
     out: dict[str, list[tuple[int, float | None]]] = {}
-    for r in rows:
+    for r in sorted(grid.collect(), key=lambda r: (r["path"], r["slot"])):
         out.setdefault(r["path"], []).append((r["slot"], r["value"]))
-    return sorted(out.items())
+    return list(out.items())

@@ -114,6 +114,41 @@ class TestRender:
         assert vals == [1.0, 1.0, 3.0, 3.0]
 
 
+class TestRenderEdges:
+    def _render(self, spark, make_datapoints, targets, format):
+        return api.render(
+            spark, _dp(make_datapoints), targets=targets,
+            from_=T0, until_=T0 + 2 * H, step=H, format=format,
+        )
+
+    def test_no_match_gives_empty_bodies(self, spark, make_datapoints):
+        assert self._render(spark, make_datapoints, "nomatch.*", "json") == "[\n]"
+        assert self._render(spark, make_datapoints, "nomatch.*", "csv") == ""
+        grid = self._render(spark, make_datapoints, "nomatch.*", "df")
+        assert grid.columns == ["path", "slot", "value"]
+        assert grid.collect() == []
+
+    def test_overlapping_targets_give_one_series(self, spark, make_datapoints):
+        out = self._render(spark, make_datapoints, ["a.x", "a.*", "*.x"], "json")
+        assert out.count('"target": "a.x"') == 1
+        assert out.count('"target": "a.y"') == 1
+        assert out.count('"target": "b.x"') == 1
+        csv = self._render(spark, make_datapoints, ["a.x", "a.{x,y}"], "csv")
+        assert csv.splitlines() == [
+            "a.x,2024-01-01 00:00:00,1",
+            "a.x,2024-01-01 01:00:00,nil",
+            "a.x,2024-01-01 02:00:00,3",
+            "a.y,2024-01-01 00:00:00,nil",
+            "a.y,2024-01-01 01:00:00,5",
+            "a.y,2024-01-01 02:00:00,nil",
+        ]
+
+    def test_branch_only_glob_gives_no_series(self, spark, make_datapoints):
+        # "*" matches the branches a and b, never a leaf
+        assert self._render(spark, make_datapoints, "*", "json") == "[\n]"
+        assert self._render(spark, make_datapoints, "*", "csv") == ""
+
+
 class TestRenderCap:
     def test_over_wide_render_raises_on_error_mode(self, spark, make_datapoints):
         import pytest
@@ -129,6 +164,14 @@ class TestRenderCap:
                 format="csv",
                 max_points=10,
                 on_exceed="error",
+            )
+
+        # the leaf count alone over the cap raises in error mode too
+        with pytest.raises(api.RenderCapExceeded, match="leaves alone"):
+            api.render(
+                spark, _dp(make_datapoints), targets="*.*",
+                from_=T0, until_=T0, step=H, format="json",
+                max_points=2, on_exceed="error",
             )
 
     def test_coarsen_mode_fits_within_cap(self, spark, make_datapoints):

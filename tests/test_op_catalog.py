@@ -3,6 +3,7 @@
 import pytest
 
 from datayours_spark.operators.catalog import (
+    collect_leaf_paths,
     expand_query,
     find_nodes,
     index_json,
@@ -77,14 +78,34 @@ class TestFindLeafPaths:
         "*",
     ]
 
+    @staticmethod
+    def _find_leaves(catalog, targets):
+        return sorted(
+            {
+                r["path"]
+                for t in targets
+                for r in find_nodes(catalog, t).where("is_leaf").collect()
+            }
+        )
+
     @pytest.mark.parametrize("pattern", PATTERNS)
     def test_matches_distributed_find(self, catalog, pattern):
         from datayours_spark.operators.catalog import find_leaf_paths
 
-        distributed = sorted(
-            r["path"]
-            for r in find_nodes(catalog, pattern)
-            .where("is_leaf")
-            .collect()
-        )
+        distributed = self._find_leaves(catalog, [pattern])
         assert find_leaf_paths(PATHS, pattern) == distributed
+        assert collect_leaf_paths(catalog, [pattern]) == distributed
+
+    def test_overlapping_targets_collect_once(self, catalog):
+        from datayours_spark.operators.catalog import find_leaf_paths
+
+        # events.click.u1 and system.cpu each match two of the targets
+        targets = ["events.click.*", "events.*.u1", "system.*", "system.cpu"]
+        want = self._find_leaves(catalog, targets)
+        assert want == [
+            "events.click.u1", "events.click.u2", "events.view.u1", "system.cpu",
+        ]
+        assert sorted({p for t in targets for p in find_leaf_paths(PATHS, t)}) == want
+        assert collect_leaf_paths(catalog, targets) == want
+        # the limit caps what reaches the driver, not which leaves match
+        assert len(collect_leaf_paths(catalog, targets, limit=2)) == 2

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Isolated-repeat timing for ONE bench query — the protocol that
 dissolved the r13 `q_index_summary` weak flag and the r14
-`streaming_rollup` drift (README "Measured context"): a FRESH
+`streaming_rollup` drift (MEASURED_LEDGER_2026-10-17.md): a FRESH
 SparkSession with the standard bench warm-ups, the query run N times
 back-to-back, CPU probes immediately before and after the whole block.
 Separates real per-query cost (the steady-state tail) from

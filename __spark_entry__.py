@@ -39,6 +39,7 @@ from datayours_spark.io import (
 from datayours_spark.operators.align import apply_null_policy, asof_resample
 from datayours_spark.operators.fetch import fetch_grid, lww_slots, time_grid
 from datayours_spark.operators.rollup import rollup
+from datayours_spark.session import conf_scope
 from datayours_spark.sources.events import datapoints_from_events
 from datayours_spark.sources.plaintext import format_plaintext, parse_plaintext_lines
 
@@ -4020,34 +4021,31 @@ def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The streaming aggregation's state store keeps one file per shuffle
     partition per micro-batch; state here is tiny (5 keys × a few windows),
-    so the stream runs with 8 state partitions (scoped override, restored
-    after termination — measured ~2× on the per-query wall clock).  On a
-    real cluster, size state partitions to distinct-key volume, not to the
-    batch default."""
+    so the stream runs with 8 state partitions (a ``conf_scope`` override,
+    restored after termination — measured ~2× on the per-query wall
+    clock).  On a real cluster, size state partitions to distinct-key
+    volume, not to the batch default."""
     import uuid
 
     from datayours_spark.io import events_stream_source
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    stream = events_stream_source(spark, sf_dir).withWatermark(
-        "ts", STREAM_WATERMARK
-    )
-    agg = stream.groupBy(F.window("ts", STREAM_WINDOW), "event_type").agg(
-        F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
-    )
-    table = f"stream_rollup_{uuid.uuid4().hex[:8]}"
-    try:
-        q = (
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+        stream = events_stream_source(spark, sf_dir).withWatermark(
+            "ts", STREAM_WATERMARK
+        )
+        agg = stream.groupBy(F.window("ts", STREAM_WINDOW), "event_type").agg(
+            F.count("*").alias("n"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        )
+        table = f"stream_rollup_{uuid.uuid4().hex[:8]}"
+        (
             agg.writeStream.format("memory")
             .queryName(table)
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(table).select(
         F.unix_timestamp("window.start").alias("slot"),
         "event_type",

@@ -16,10 +16,13 @@ Scale notes:
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datayours_spark.io import one_job_collect, small_df, spread_scan
+from datayours_spark.session import conf_scope
 
 def as_double_array(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -819,10 +822,6 @@ def ivf_centroids(
     )
 
 
-import contextlib
-import threading
-
-
 #: below this many training rows per iteration, Janino compilation of the
 #: one-shot k×d-literal assignment expression costs more than interpreted
 #: execution saves.  Same-session A/B of the 2-iter coarse trainer:
@@ -830,14 +829,19 @@ import threading
 #: codegen vs 17.1 s interpreted.  Crossover sits around ~50k rows.
 TRAINING_CODEGEN_MIN_ROWS = 50_000
 
-#: interleaved-scope bookkeeping for _training_exec_conf: per-session
-#: [depth, saved_confs], guarded by the lock (held only while flipping
-#: confs, never across a training collect)
-_training_conf_lock = threading.Lock()
-_training_conf_state: dict[int, list] = {}
+#: the training scope's flips.  Model-state aggregates hold k×d (or
+#: m×ks×dsub) reduce rows — KB-scale by the same row gate that scopes
+#: codegen/AQE, so one reduce partition is the right shape wherever the
+#: scope applies; 32 near-empty reduce tasks per Lloyd collect were pure
+#: scheduling (~0.2-0.4 s per iteration on the measured local floor, r15)
+_TRAINING_CONFS = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
+}
 
 
-@contextlib.contextmanager
 def _training_exec_conf(spark, n_rows: int):
     """Disable whole-stage codegen for a MODEL-TRAINING scope when the
     per-iteration input is small (see TRAINING_CODEGEN_MIN_ROWS).
@@ -856,55 +860,11 @@ def _training_exec_conf(spark, n_rows: int):
     sized and AQE's runtime coalescing is exactly what we want — it
     stays on.
 
-    The conf flips are SESSION-GLOBAL for the duration of the training
-    collect (a concurrent UNRELATED job sharing the SparkSession would
-    run codegen-disabled — harmless but slower; use a cloned
-    ``spark.newSession()`` to isolate such a job).  Interleaved/nested
-    TRAINING scopes are safe (r5 verdict task #6): a per-session depth
-    counter makes only the OUTERMOST scope save and restore, so exits in
-    any order restore the original pre-training confs, never a stale
-    intermediate."""
+    Save/restore, overlap and the session-global contract follow
+    :func:`datayours_spark.session.conf_scope`."""
     if n_rows >= TRAINING_CODEGEN_MIN_ROWS:
-        yield
-        return
-    key = id(spark)
-    with _training_conf_lock:
-        state = _training_conf_state.get(key)
-        if state is None:
-            saved = (
-                spark.conf.get("spark.sql.codegen.wholeStage", "true"),
-                spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK"),
-                spark.conf.get("spark.sql.adaptive.enabled", "true"),
-                spark.conf.get("spark.sql.shuffle.partitions", "200"),
-            )
-            spark.conf.set("spark.sql.codegen.wholeStage", "false")
-            spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            # model-state aggregates: the reduce side holds k×d (or
-            # m×ks×dsub) rows — KB-scale BY THE SAME ROW GATE that
-            # scopes codegen/AQE here, so one reduce partition is the
-            # right shape wherever this scope applies (above the gate
-            # the scope is a no-op and the session default + AQE
-            # coalescing stay in charge).  32 near-empty reduce tasks
-            # per Lloyd collect were pure scheduling (~0.2-0.4 s per
-            # iteration on the measured local floor, r15).
-            spark.conf.set("spark.sql.shuffle.partitions", "1")
-            _training_conf_state[key] = [1, saved]
-        else:
-            state[0] += 1
-    try:
-        yield
-    finally:
-        with _training_conf_lock:
-            state = _training_conf_state[key]
-            state[0] -= 1
-            if state[0] == 0:
-                ws, fm, aqe, sp = state[1]
-                del _training_conf_state[key]
-                spark.conf.set("spark.sql.codegen.wholeStage", ws)
-                spark.conf.set("spark.sql.codegen.factoryMode", fm)
-                spark.conf.set("spark.sql.adaptive.enabled", aqe)
-                spark.conf.set("spark.sql.shuffle.partitions", sp)
+        return contextlib.nullcontext()
+    return conf_scope(spark, _TRAINING_CONFS)
 
 
 def kmeans_centroids(

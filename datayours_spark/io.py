@@ -19,12 +19,12 @@ from __future__ import annotations
 
 import os
 import threading
-from contextlib import contextmanager, nullcontext
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datayours_spark.session import configure_session
+from datayours_spark.session import conf_scope, configure_session
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -72,35 +72,8 @@ def small_df(spark: SparkSession, data, schema) -> DataFrame:
     )
 
 
-#: interleaved-scope bookkeeping for the AQE-off scopes below: per-session
-#: [depth, saved_value], guarded by the lock (held only while flipping the
-#: conf, never across a collect) — the _training_exec_conf discipline, so
-#: overlapping scopes on different threads of one session restore the
-#: ORIGINAL value instead of a stale intermediate (ADVICE r15)
-_aqe_scope_lock = threading.Lock()
-_aqe_scope_state: dict[int, list] = {}
-
-
-@contextmanager
-def _aqe_off(spark: SparkSession):
-    key = id(spark)
-    with _aqe_scope_lock:
-        state = _aqe_scope_state.get(key)
-        if state is None:
-            saved = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            state = _aqe_scope_state[key] = [1, saved]
-        else:
-            state[0] += 1
-    try:
-        yield
-    finally:
-        with _aqe_scope_lock:
-            state = _aqe_scope_state[key]
-            state[0] -= 1
-            if state[0] == 0:
-                del _aqe_scope_state[key]
-                spark.conf.set("spark.sql.adaptive.enabled", state[1])
+#: the one conf flip behind both AQE-off scopes below
+_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 
 
 def one_job_collect(spark: SparkSession):
@@ -116,10 +89,9 @@ def one_job_collect(spark: SparkSession):
     reduce keyspace is bounded (buckets/planes/model state) — a collect
     that transitively materializes corpus-scale lazy plans, or shuffles
     a corpus-cardinality keyspace, must keep AQE (see
-    ``winnow_neardup(guard_one_job=False)``).  Nested/overlapping use is
-    safe via a per-session depth counter + lock (outermost scope saves
-    and restores)."""
-    return _aqe_off(spark)
+    ``winnow_neardup(guard_one_job=False)``).  Save/restore and
+    overlap follow :func:`datayours_spark.session.conf_scope`."""
+    return conf_scope(spark, _AQE_OFF)
 
 
 def static_construct(spark: SparkSession, small: bool):
@@ -136,13 +108,21 @@ def static_construct(spark: SparkSession, small: bool):
     FIRST consuming action as ordinary shuffle-map stages of one job.
 
     Gate contract: pass ``small=True`` only when the driving input is
-    below cluster parallelism (fewer scan splits than
-    ``defaultParallelism`` — micro-batches, trickle triggers, the sf
-    fixtures), where AQE's runtime re-optimization has nothing to
-    coalesce and its stage-job round-trips are pure overhead.  At corpus
-    scale the gate is off and this is a no-op: plans stay adaptive
-    (runtime coalescing + skew handling), exactly as before."""
-    return _aqe_off(spark) if small else nullcontext()
+    below cluster parallelism (:func:`below_parallelism` — micro-
+    batches, trickle triggers, the sf fixtures), where AQE's runtime
+    re-optimization has nothing to coalesce and its stage-job round-
+    trips are pure overhead.  At corpus scale the gate is off and this
+    is a no-op: plans stay adaptive (runtime coalescing + skew
+    handling), exactly as before.  Save/restore and overlap follow
+    :func:`datayours_spark.session.conf_scope`."""
+    return conf_scope(spark, _AQE_OFF) if small else nullcontext()
+
+
+def below_parallelism(df: DataFrame) -> bool:
+    """The small-input gate: ``df`` delivers fewer partitions than the
+    cluster's ``defaultParallelism``."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.rdd.getNumPartitions() < par
 
 
 def spread_scan(df: DataFrame) -> DataFrame:
@@ -156,10 +136,8 @@ def spread_scan(df: DataFrame) -> DataFrame:
     corpus-scale shuffle is ever introduced.  Only safe for consumers
     whose values are row-local or exact (integer/count) aggregates;
     float-mean consumers keep their scan order."""
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
+    if below_parallelism(df):
+        return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     return df
 
 

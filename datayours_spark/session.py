@@ -10,6 +10,8 @@ is a starting hint only; AQE coalesces to the right size at runtime.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -99,3 +101,56 @@ def configure_session(spark: SparkSession) -> SparkSession:
         if key not in LAUNCH_ONLY:
             spark.conf.set(key, value)
     return spark
+
+
+#: the one book of scoped conf flips: (session UUID, conf key) ->
+#: [depth, value before the first entry]; the lock is held only while
+#: flipping, never across the scope's body
+_scope_lock = threading.Lock()
+_scope_state: dict[tuple[str, str], list] = {}
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on ``spark`` for the ``with`` block, then restore.
+
+    Key rule: scopes are counted per (JVM session, conf key).  The JVM
+    session is identified by its ``sessionUUID``, which every Python
+    wrapper of one session shares and which ``newSession()`` and
+    Structured Streaming's per-query clone (the session a
+    ``foreachBatch`` batch plans in) do not — a flip on one session is
+    invisible in the others, so each must be scoped on its own.
+
+    Restore rule: the first entry on a key saves its current value (or
+    its unset state); the last exit on that key restores it, whatever
+    the exit order and whichever thread exits.  While scopes overlap on
+    a key, the latest entry's value holds.
+
+    Contract: a flip is session-global.  Every query planned on the
+    session while a scope is open — on any thread — sees the scoped
+    value."""
+    sid = spark._jsparkSession.sessionUUID()
+    entered = []  # a key is booked only once its set succeeded
+    try:
+        with _scope_lock:
+            for key, value in confs.items():
+                state = _scope_state.get((sid, key))
+                before = spark.conf.get(key, None) if state is None else None
+                spark.conf.set(key, value)
+                if state is None:
+                    _scope_state[(sid, key)] = [1, before]
+                else:
+                    state[0] += 1
+                entered.append(key)
+        yield
+    finally:
+        with _scope_lock:
+            for key in entered:
+                state = _scope_state[(sid, key)]
+                state[0] -= 1
+                if state[0] == 0:
+                    del _scope_state[(sid, key)]
+                    if state[1] is None:
+                        spark.conf.unset(key)
+                    else:
+                        spark.conf.set(key, state[1])

@@ -68,7 +68,7 @@ from datayours_spark.functions.dedup import (
 )
 from datayours_spark.functions.sampling import hash_bucket
 from datayours_spark.functions.text import gopher_rules
-from datayours_spark.io import spread_scan, static_construct
+from datayours_spark.io import below_parallelism, spread_scan, static_construct
 from datayours_spark.streaming.store import BatchStore
 from datayours_spark.streaming.winnowstream import (
     _index_lww,
@@ -400,8 +400,7 @@ def ingest_pipeline_batch(
     # post-guard chain inside the caller's first action.  Above the
     # gate this is a no-op: plans stay adaptive, the guard keeps AQE
     # (guard_one_job=False — ADVICE r15), exactly the at-scale shape.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    small = docs.rdd.getNumPartitions() < par
+    small = below_parallelism(docs)
     with static_construct(docs.sparkSession, small):
         # round-robin spread for the per-row-heavy fingerprint
         # generator, gated on the survivors relation itself (ADVICE
@@ -657,8 +656,11 @@ class IngestPipeline:
         # off) keep adaptive plans.  The store-sized compaction folds
         # run OUTSIDE the scope: their input is the accumulated store,
         # not the batch, so they must keep AQE regardless of batch size.
-        par = self.spark.sparkContext.defaultParallelism
-        small = docs.rdd.getNumPartitions() < par
+        # On a real trigger the batch plans in the stream's cloned
+        # session, which this scope does not reach; scoping that clone
+        # too measured slower (fewer jobs but twice the tasks per
+        # trickle trigger: AQE's partition coalescing pays there).
+        small = below_parallelism(docs)
         with static_construct(self.spark, small):
             self._run_batch(docs, batch_id, schemas, dests)
         fired = self.store.maybe_compact(

@@ -78,7 +78,7 @@ from datayours_spark.functions.dedup import (
     winnow_fingerprint_sets,
     winnow_incremental_indexed,
 )
-from datayours_spark.io import static_construct
+from datayours_spark.io import below_parallelism, static_construct
 from datayours_spark.streaming.store import BatchStore
 
 #: serializes the literal point probe's session-global
@@ -968,8 +968,11 @@ class WinnowStream:
         # trigger paid blocking stage-job barriers.  A batch below one
         # scan split per core compiles non-adaptively — bulk batches
         # keep AQE.  Store-sized compaction runs outside the scope.
-        par = self.spark.sparkContext.defaultParallelism
-        small = new.rdd.getNumPartitions() < par
+        # On a real trigger the batch plans in the stream's cloned
+        # session, which this scope does not reach; scoping that clone
+        # too measured slower (fewer jobs but twice the tasks per
+        # trickle trigger: AQE's partition coalescing pays there).
+        small = below_parallelism(new)
         with static_construct(self.spark, small):
             self._run_batch(new, batch_id, dests)
         fired = self.store.maybe_compact(

@@ -27,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import _cpu_probe_sec
 from datayours_spark.session import get_spark
 
 
@@ -203,11 +204,8 @@ def main() -> None:
     # +5 jobs on the 1%-batch phase while pytest hammered the box) —
     # quote counts together with the probe that contextualizes them
     # (1.25 s = healthy baseline for this box)
-    t0 = time.perf_counter()
-    sum(i * i for i in range(20_000_000))
-    probe = round(time.perf_counter() - t0, 2)
     print(json.dumps({"metric": "pipeline jobcount", "docs": n_docs,
-                      "cpu_probe_sec": probe, "ops": out}))
+                      "cpu_probe_sec": _cpu_probe_sec(), "ops": out}))
     spark.stop()
 
 

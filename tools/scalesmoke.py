@@ -31,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import _cpu_probe_sec
 from datayours_spark.kernel.rules import parse_aggregation_rules
 from datayours_spark.operators.align import locf_chunked
 from datayours_spark.operators.fetch import fetch_grid, lww_slots
@@ -41,17 +42,6 @@ N = int(os.environ.get("SCALE_ROWS", 10_000_000))
 N_DOCS = int(os.environ.get("SCALE_DOCS", 200_000))
 N_SERIES = 500
 T0 = 1_704_067_200
-
-
-def cpu_probe_sec() -> float:
-    """Pure-Python CPU probe (sum i*i over 20M; 1.25 s = healthy
-    baseline on this box).  The smokes' wall-clock claims are only
-    comparable across sessions when quoted with the probe that
-    contextualizes them — this host intermittently degrades 2-4x
-    (r10-r12 measurement caveat)."""
-    t0 = time.perf_counter()
-    sum(i * i for i in range(20_000_000))
-    return round(time.perf_counter() - t0, 2)
 
 
 def smoke_prune_policy():
@@ -2132,7 +2122,7 @@ def smoke_summary() -> None:
     )
     print(json.dumps({
         "metric": "bloom summary smoke",
-        "cpu_probe_sec": cpu_probe_sec(),
+        "cpu_probe_sec": _cpu_probe_sec(),
         "docs": n_docs,
         "batch_docs": b + 20,
         "standing_ingest_sec": standing_sec,
@@ -2491,7 +2481,7 @@ def smoke_pipeline() -> None:
     out["pack_contiguity"] = {"offset_gaps": gaps}
     shutil.rmtree(work, ignore_errors=True)
     print(json.dumps({"metric": "pipeline smoke",
-                      "cpu_probe_sec": cpu_probe_sec(), "ops": out}))
+                      "cpu_probe_sec": _cpu_probe_sec(), "ops": out}))
     spark.stop()
 
 
@@ -2785,7 +2775,7 @@ def smoke_pipeline_scale() -> None:
     out["pack_contiguity"] = {"offset_gaps": gaps}
     shutil.rmtree(work, ignore_errors=True)
     print(json.dumps({"metric": "pipeline scale smoke", "slices": slices,
-                      "cpu_probe_sec": cpu_probe_sec(), "ops": out}))
+                      "cpu_probe_sec": _cpu_probe_sec(), "ops": out}))
     spark.stop()
 
 

@@ -1780,7 +1780,15 @@ def q_resolution_route(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(step).alias("step"),
                 F.count("*").alias("n_grid"),
                 F.count("value").alias("n_known"),
-                F.round(F.avg("value"), 4).alias("avg_v"),
+                # exact decimal accumulation, one terminal round (the
+                # q_tpch_q10 precedent): the fine values are 2-dp, so a
+                # mean can sit exactly on a 4-dp half (56.29625 at
+                # sf0.1) where a double sum's merge-order ulp decides
+                # the rounding; 10 dp keeps the 2-dp values exact and
+                # the mid/coarse means far inside the 4-dp rounding
+                F.round(F.avg(F.col("value").cast("decimal(18,10)")), 4)
+                .cast("double")
+                .alias("avg_v"),
             )
         )
     out = outs[0]

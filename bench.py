@@ -6,10 +6,22 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Each query is executed once after a session warm-up; timing covers plan +
 execution + collect (driver-observed wall clock).
+
+Profile mode runs the same session, warm-up, order and timed loop, with
+each query's construct (``fn(spark, sf)``) and action (the noop write) in
+a ``perfbench/spans.py`` span, and prints one JSON line per query and a
+summary line; a full single pass over BENCH_QUERIES also writes
+BENCH_PROFILE.json.  ``--repeat N`` on one query in a fresh process is the
+isolated-repeat protocol (session-history drift vs per-query cost):
+
+  python bench.py                                  # the stdout line
+  python bench.py --profile                        # BENCH_PROFILE.json
+  python bench.py --profile --repeat 10 q_fetch_grid
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -19,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from datayours_spark.session import get_spark
+from perfbench.spans import Tracer
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -245,85 +258,77 @@ def _cpu_probe_sec() -> float:
     return round(time.perf_counter() - t0, 2)
 
 
-#: queries per session in --fresh-session-per-group mode (below)
-GROUP_SIZE = 12
-
-
 def main() -> None:
-    # --fresh-session-per-group (r14 verdict #4): stateful/streaming
-    # queries drift within ONE long bench session (streaming_rollup
-    # 3.2 -> 4.4 s across a session-history-heavy run vs 2.56-2.8 s
-    # isolated — state-store/GC accumulation in the harness, not the
-    # operator).  This mode stops and recreates the SparkSession every
-    # GROUP_SIZE queries (fresh SparkEnv, fresh state-store providers;
-    # warm-ups re-run per session and stay unbilled), so each group is
-    # measured near the isolated-repeat regime.  The DEFAULT stays one
-    # session: it is what the driver runs (plain `python bench.py`),
-    # what every BENCH_r{N}.json was recorded under, and the stdout
-    # line contract is identical in both modes.  Fresh-mode full
-    # output lands in BENCH_LOCAL_FULL_FRESH.json so a measurement run
-    # never clobbers the round's committed single-session capture;
-    # the back-to-back delta is documented in
-    # MEASURED_LEDGER_2026-10-17.md.
-    fresh_per_group = "--fresh-session-per-group" in sys.argv[1:]
+    ap = argparse.ArgumentParser(
+        description="Time the bench queries; --profile splits each into "
+        "construct and action with per-phase Spark counts."
+    )
+    ap.add_argument("--profile", action="store_true",
+                    help="span construct/action, print one JSON line per "
+                    "query, write BENCH_PROFILE.json on a full single pass")
+    ap.add_argument("--repeat", type=int, default=1,
+                    help="passes over the queries (with --profile)")
+    ap.add_argument("queries", nargs="*",
+                    help="query names (with --profile; default BENCH_QUERIES)")
+    args = ap.parse_args()
+    if not args.profile and (args.queries or args.repeat != 1):
+        ap.error("query names and --repeat need --profile")
+    names = args.queries or BENCH_QUERIES
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     probe_before = _cpu_probe_sec()
     registry = entrymod.queries()
 
-    groups = (
-        [
-            BENCH_QUERIES[i : i + GROUP_SIZE]
-            for i in range(0, len(BENCH_QUERIES), GROUP_SIZE)
-        ]
-        if fresh_per_group
-        else [BENCH_QUERIES]
-    )
+    spark = get_spark("datayours-bench")
+    # warm-up: touch the big tables so JVM/codegen startup isn't billed
+    # to the first query
+    registry["q_tally_minmax"](spark, SF_DIR).count()
+    registry["q_text_stats"](spark, SF_DIR).count()
+    _warm_streaming(spark)
+    _warm_arrow(spark)
+    # disabled (plain mode): installs nothing and sets no job group
+    tracer = Tracer(spark, enabled=args.profile)
     timings: dict[str, float] = {}
-    spark = None
-    for group in groups:
-        spark = get_spark("datayours-bench")
-        # warm-up: touch the big tables so JVM/codegen startup isn't
-        # billed to the first query (re-run per session in fresh mode)
-        registry["q_tally_minmax"](spark, SF_DIR).count()
-        registry["q_text_stats"](spark, SF_DIR).count()
-        _warm_streaming(spark)
-        _warm_arrow(spark)
-        for name in group:
-            fn = registry[name]
+    profile: list[dict] = []
+    for rep in range(args.repeat):
+        for name in names:
             t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            # noop sink: computes EVERY output column distributed (a
-            # bare .count() would let Catalyst prune the computed
-            # projections)
-            df.write.format("noop").mode("overwrite").save()
+            construct, action = run_query(tracer, spark, registry, name, SF_DIR, rep)
             timings[name] = round(time.perf_counter() - t0, 3)
-        if fresh_per_group:
-            spark.stop()
+            if args.profile:
+                profile.append(_profile_record(tracer, name, rep, construct, action))
+                print(json.dumps(profile[-1]), flush=True)
     total = round(sum(timings.values()), 3)
     probe_after = _cpu_probe_sec()
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    here = os.path.dirname(os.path.abspath(__file__))
+    if args.profile:
+        summary = {
+            "metric": "datayours bench profile", "sf": sf_val,
+            "repeat": args.repeat,
+            "cpus": spark.sparkContext.defaultParallelism,
+            "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
+            "probe_before": probe_before, "probe_after": probe_after,
+            **{
+                f"{phase}_{key}": round(sum(r[f"{phase}_{key}"] for r in profile), 3)
+                for phase in ("construct", "action") for key in ("s", "jobs")
+            },
+        }
+        if names == BENCH_QUERIES and args.repeat == 1:
+            with open(os.path.join(here, "BENCH_PROFILE.json"), "w") as fh:
+                json.dump({**summary, "queries": profile}, fh, indent=1)
+        spark.stop()
+        print(json.dumps(summary), flush=True)
+        return
     # full precision for local analysis (the stdout line is size-capped
     # at 4 chars of worst-case headroom, so the probes ride ONLY here —
     # this file is committed every round and is what adjudications and
     # the judge read for host context)
-    full_name = (
-        "BENCH_LOCAL_FULL_FRESH.json"
-        if fresh_per_group
-        else "BENCH_LOCAL_FULL.json"
-    )
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     full_name), "w"
-    ) as fh:
+    with open(os.path.join(here, "BENCH_LOCAL_FULL.json"), "w") as fh:
         json.dump(
             {"metric": "datayours bench", "value": total, "unit": "sec",
              "queries": timings, "sf": sf_val,
              "probe_before": probe_before, "probe_after": probe_after,
-             "session_mode": (
-                 f"fresh_per_group_{GROUP_SIZE}"
-                 if fresh_per_group
-                 else "single_session"
-             )},
+             "session_mode": "single_session"},
             fh,
         )
     # stop FIRST so no shutdown log lands after the JSON line, then print
@@ -334,6 +339,48 @@ def main() -> None:
     # tests/test_bench_contract.py
     spark.stop()
     print(bench_line(total, timings, sf_val), flush=True)
+
+
+def run_query(tracer, spark, registry, name: str, sf_dir: str, rep: int = 0):
+    """One benched query: construct (``fn(spark, sf_dir)``) and action,
+    each in its own span of ``tracer``; returns the two spans (None when
+    the tracer is disabled)."""
+    with tracer.span("construct", query=name, cycle=rep) as construct:
+        df = registry[name](spark, sf_dir)
+    with tracer.span("action", query=name, cycle=rep) as action:
+        # noop sink: computes EVERY output column distributed (a bare
+        # .count() would let Catalyst prune the computed projections)
+        df.write.format("noop").mode("overwrite").save()
+    return construct, action
+
+
+def _profile_record(tracer, name: str, rep: int, *phases) -> dict:
+    """One query's profile: per phase (construct = ``fn(spark, sf)``,
+    action = the noop write) its seconds and the job/stage/task/shuffle
+    counts of ``Tracer.resolve``, plus every job's id, seconds, completed
+    stage and task counts and callsite from the status store."""
+    tracer.resolve()
+    sc = tracer.sc
+    store = sc._jsc.sc().statusStore()
+    rec: dict = {"query": name, "repeat": rep}
+    jobs = []
+    for sp in phases:
+        rec[f"{sp['name']}_s"] = round(sp["end"] - sp["start"], 3)
+        for key in ("jobs", "stages", "tasks", "shuffle_bytes"):
+            rec[f"{sp['name']}_{key}"] = sp[key]
+        for jid in sorted(sc.statusTracker().getJobIdsForGroup(sp["group"])):
+            jd = store.job(jid)
+            start, end = jd.submissionTime().get(), jd.completionTime().get()
+            jobs.append({
+                "id": jid,
+                "phase": sp["name"],
+                "s": round((end.getTime() - start.getTime()) / 1000, 3),
+                "stages": jd.numCompletedStages(),
+                "tasks": jd.numCompletedTasks(),
+                "callsite": jd.name(),
+            })
+    rec["jobs"] = jobs
+    return rec
 
 
 def bench_line(total: float, timings: dict[str, float], sf) -> str:

@@ -9,6 +9,7 @@ silently recur.
 """
 
 import json
+import os
 
 import bench
 
@@ -50,3 +51,11 @@ def test_bench_queries_exist_in_registry():
     q = entrymod.queries()
     ghosts = [n for n in bench.BENCH_QUERIES if n not in q]
     assert ghosts == [], f"bench names unknown queries: {ghosts}"
+
+
+def test_committed_profile_covers_bench_queries():
+    path = os.path.join(os.path.dirname(bench.__file__), "BENCH_PROFILE.json")
+    with open(path) as fh:
+        profiled = {r["query"] for r in json.load(fh)["queries"]}
+    missing = [n for n in bench.BENCH_QUERIES if n not in profiled]
+    assert missing == [], f"BENCH_PROFILE.json has no record for: {missing}"

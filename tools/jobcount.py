@@ -21,7 +21,6 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -29,6 +28,7 @@ from pyspark.sql import functions as F
 
 from bench import _cpu_probe_sec
 from datayours_spark.session import get_spark
+from perfbench.spans import Tracer
 
 
 def main() -> None:
@@ -86,16 +86,15 @@ def main() -> None:
         synthetic_documents(spark, n_docs), fail_mod=97
     ).localCheckpoint(eager=True)
 
-    st = spark.sparkContext.statusTracker()
+    # one span per phase: its job group holds exactly the phase's jobs
+    tracer = Tracer(spark, enabled=True)
     out: dict[str, dict] = {}
 
     def run(name: str, batch, batch_id: int) -> None:
-        before = set(st.getJobIdsForGroup(None) or [])
-        t0 = time.perf_counter()
-        pipe._process(batch, batch_id)
-        dt = time.perf_counter() - t0
-        jobs = sorted(set(st.getJobIdsForGroup(None) or []) - before)
-        out[name] = {"jobs": len(jobs), "sec": round(dt, 2)}
+        with tracer.span(name) as sp:
+            pipe._process(batch, batch_id)
+        tracer.resolve()
+        out[name] = {"jobs": sp["jobs"], "sec": round(sp["end"] - sp["start"], 2)}
 
     run("standing_ingest", corpus, 0)
 

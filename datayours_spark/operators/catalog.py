@@ -13,8 +13,10 @@ federation/dedup; `graphite_cgi.lua:225-301` endpoint shapes):
 
 Scale notes: the catalog is `SELECT DISTINCT path` — one shuffle over the
 series dimension (small relative to datapoints; at 100 TB the distinct paths
-live in `series_meta` and this scan disappears).  Glob translation happens
-driver-side (tiny), pushed down as `rlike` filters.
+come from the ingest-maintained `series_stats` table, which
+`api.render_mixed(catalog=...)` already accepts, and this scan disappears —
+ROADMAP item 2's read side).  Glob translation happens driver-side (tiny),
+pushed down as `rlike` filters.
 """
 
 from __future__ import annotations

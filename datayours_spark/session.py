@@ -36,6 +36,17 @@ def engine_conf() -> dict[str, str]:
         # advisory size (64 MB) is exactly the 'fewer, larger reduce
         # partitions' shape guide §2.2 calls for.
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+        # Let AQE coalesce the shuffle inside a cached plan too.  The
+        # default (false) pins a persisted Dataset at the full shuffle
+        # partition count.  The engine's only Dataset caches are the
+        # ingest trigger's (`IngestPipeline._write_batch` and its flow
+        # admission), so a 1,200-line Carbon trigger ran its cache
+        # build, its partitionBy("date") write and its stats partial
+        # aggregate as 32 near-empty tasks each: 98 tasks and 54 files
+        # per trigger, 2.7 bytes written per user byte.  Coalesced by the
+        # advisory size it runs 5 tasks and writes one file per touched
+        # date (0.58 bytes per user byte); a large bulk batch still splits.
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.ui.enabled": "false",

@@ -532,6 +532,11 @@ class IngestPipeline:
         out = deduped.select(
             "path", "ts_sec", "ts_us", "batch_seq", "value", "date"
         ).persist()  # two consumers below; avoid recomputing the dedup agg
+        # The cache is AQE-sized (canChangeCachedPlanOutputPartitioning in
+        # session.engine_conf): its partitions are the dedup shuffle
+        # coalesced by the advisory size, so the write runs one task per
+        # coalesced partition and leaves partitions × dates-touched files
+        # (one partition, so one file per date, for a Carbon-sized trigger).
         skip_write = defer_pend is not None and self._last_admitted == 0
         try:
             if not skip_write:

@@ -403,10 +403,13 @@ def ingest_pipeline_batch(
     small = below_parallelism(docs)
     with static_construct(docs.sparkSession, small):
         # round-robin spread for the per-row-heavy fingerprint
-        # generator, gated on the survivors relation itself (ADVICE
-        # r15: docs' split count can differ from survivors' once the
-        # classifier anti-join reshuffles it)
-        survivors = spread_scan(survivors)
+        # generator, gated on the survivors relation itself (docs' split
+        # count can differ from survivors' once the classifier anti-join
+        # reshuffles it).  Only under the small gate: above it the plan
+        # is adaptive, so reading survivors' partition count would run
+        # the gate + classifier sub-DAG eagerly, and a corpus delivered
+        # in >= cores splits needs no spread anyway.
+        survivors = spread_scan(survivors) if small else survivors
         surv_fp = winnow_fingerprint_sets(
             survivors, k=k, w=w, with_count=True
         ).localCheckpoint(eager=False)

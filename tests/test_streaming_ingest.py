@@ -201,6 +201,58 @@ class TestIngest:
         assert raw.where("path = 'metrics.r'").count() == 1
 
 
+def two_date_lines() -> list[str]:
+    """Six series, each with points on two dates (2024-01-06 and -07)."""
+    return [
+        f"metrics.s{s} {i} {t0 + 60 * i}"
+        for s in range(6)
+        for t0 in (NOW - 86_400 - 3_600, NOW - 3_600)
+        for i in range(10)
+    ]
+
+
+def stream_shape(spark, q) -> tuple[int, int]:
+    """(jobs, tasks) the stream has run so far, counted on its ``runId``
+    job group once the listener bus has drained; a skipped stage (its
+    shuffle output reused) completes no task and counts none."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(q.runId))
+    tasks = 0
+    for jid in jobs:
+        for sid in tracker.getJobInfo(jid).stageIds:
+            stage = tracker.getStageInfo(sid)
+            tasks += stage.numCompletedTasks if stage else 0
+    return len(jobs), tasks
+
+
+def files_per_date(output_dir: str) -> dict[str, int]:
+    root = Path(output_dir) / "datapoints"
+    return {
+        d.name: len(list(d.glob("*.parquet"))) for d in root.glob("date=*")
+    }
+
+
+class TestTriggerShape:
+    """The cached batch in ``_write_batch`` is sized by AQE like any
+    other shuffle, so a small trigger is one partition end to end: one
+    task per job, one file per touched date, one stats increment."""
+
+    def test_small_trigger_runs_one_task_per_job(self, pipeline, spark):
+        drop_file("two-dates.txt", two_date_lines())
+        q = pipeline.start()
+        q.processAllAvailable()
+        q.stop()
+        assert stream_shape(spark, q) == (5, 5)
+        assert files_per_date(pipeline.output_dir) == {
+            "date=2024-01-06": 1, "date=2024-01-07": 1,
+        }
+        stats = Path(pipeline.output_dir) / "series_stats"
+        assert len(list(stats.glob("*.parquet"))) == 1
+        assert pipeline.datapoints().count() == 120
+
+
 class TestUserHookInStream:
     def test_hook_drops_and_derives(self, spark):
         import shutil
@@ -768,6 +820,22 @@ class TestFlowLimits:
         q.stop()
         assert pipeline.datapoints().count() == 8
         assert pipeline.flow_tally().count() == 0
+
+    def test_admit_all_trigger_writes_one_file_per_date(self, spark):
+        """The flow-limited branch persists its admitted frames and the
+        merged batch: with a budget that admits everything, the write
+        still leaves one file per touched date.  (Its count and
+        threshold jobs make the job count branch-specific, so only the
+        layout is pinned.)"""
+        p = self._pipe(spark, max_updates_per_second=1_000_000)
+        drop_file("two-dates.txt", two_date_lines())
+        q = p.start()
+        q.processAllAvailable()
+        q.stop()
+        assert files_per_date(p.output_dir) == {
+            "date=2024-01-06": 1, "date=2024-01-07": 1,
+        }
+        assert p.datapoints().count() == 120
 
 
 class TestFlowLimitRestart:

@@ -920,3 +920,31 @@ class TestObservedEarlyExit:
         )
         assert {r.doc_id for r in b_packed.collect()} == {3}
         shutil.rmtree(TMP, ignore_errors=True)
+
+
+class TestSmallInputGate:
+    def test_large_input_reads_one_partition_count(self, spark, monkeypatch):
+        """Above the small gate the plan is adaptive, where reading a
+        relation's partition count runs its whole sub-DAG.  So
+        ``ingest_pipeline_batch`` asks the gate once, on ``docs``, and
+        does not spread (or probe) the gate survivors."""
+        from datayours_spark import io
+        from datayours_spark.streaming import pipeline as pl
+
+        docs = spark.createDataFrame(DOCS, SCHEMA)
+        par = spark.sparkContext.defaultParallelism
+        assert docs.rdd.getNumPartitions() >= par
+        real = io.below_parallelism
+        probed = []
+
+        def spy(df):
+            probed.append(df)
+            return real(df)
+
+        monkeypatch.setattr(io, "below_parallelism", spy)
+        monkeypatch.setattr(pl, "below_parallelism", spy)
+        _g, _sc, _c, pairs, packed, _pl = ingest_pipeline_batch(docs, **KW)
+        assert len(probed) == 1 and probed[0] is docs
+        kept = {r.doc_id for r in packed.collect()}
+        assert 1 in kept and not kept & {2, 3, 10, 20}
+        assert {1, 3, 20} <= {i for r in pairs.collect() for i in r[:2]}

@@ -4442,8 +4442,8 @@ def q_quantile_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     lives.  The rank check joins the tiny per-lang sketch row back
     across the corpus (broadcast) for one extra counting pass; the
     production shape at 100 TB is the approx-only single-pass
-    aggregate (tools/scalesmoke.py quantile_approx_tdigest measures
-    that form at 30M rows: ~55× rows/s over exact)."""
+    aggregate (MEASURED_LEDGER_2026-10-17.md records that form at
+    30M rows: ~55× rows/s over exact)."""
     docs = load_table(spark, sf_dir, "documents").select(
         "lang", "source", "n_chars"
     )
@@ -4505,9 +4505,8 @@ def q_daily_active_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-sparse small-cardinality regime).  The oracle recomputes the
     exact columns and a literal TRUE — an out-of-band estimate
     hash-mismatches loudly.  The production shape at 100 TB is the
-    approx-only aggregate (tools/scalesmoke.py
-    daily_active_hll_hi_card measures it at 30M rows / 10M-user
-    cardinality: ~4× over exact)."""
+    approx-only aggregate (MEASURED_LEDGER_2026-10-17.md records it
+    at 30M rows / 10M-user cardinality: ~4× over exact)."""
     events = load_table(spark, sf_dir, "events")
     day = (F.col("ts_sec") - F.col("ts_sec") % 86_400).alias("day_sec")
     g = events.groupBy(day).agg(

@@ -1423,7 +1423,7 @@ def ivfpq_topk(
     # codes/assignments are INDEX STATE: in production both are computed
     # once at ingest and stored (codes are the m-byte payload; cluster is
     # the partition key).  Passing them skips the per-search re-encode —
-    # the scalesmoke measures the two phases separately.
+    # MEASURED_LEDGER_2026-10-17.md records the two phases separately.
     assign = (
         assignments
         if assignments is not None
@@ -2794,8 +2794,8 @@ def project_embeddings(
     schema; float ACCUMULATION order still differs (sequential fold vs
     blocked dgemm), so a sum landing within one ulp of a round_dp
     boundary can in principle still diverge — the byte-equality pin is
-    empirical at the differential-test fixtures and the scalesmoke
-    production-dims sample, not an algebraic guarantee."""
+    empirical at the differential-test fixtures and the production-dims
+    sample in MEASURED_LEDGER_2026-10-17.md, not an algebraic guarantee."""
     import math
 
     if force not in (None, "fold", "arrow"):

@@ -59,3 +59,20 @@ def test_committed_profile_covers_bench_queries():
         profiled = {r["query"] for r in json.load(fh)["queries"]}
     missing = [n for n in bench.BENCH_QUERIES if n not in profiled]
     assert missing == [], f"BENCH_PROFILE.json has no record for: {missing}"
+
+
+def test_no_program_file_hard_codes_the_checkout():
+    # tools write their scratch data under their own checkout; a
+    # literal absolute checkout path writes into whichever checkout
+    # happens to sit there instead
+    root = os.path.dirname(os.path.abspath(bench.__file__))
+    files = [os.path.join(root, "bench.py"), os.path.join(root, "__spark_entry__.py")]
+    for sub in ("tools", "perfbench", "datayours_spark"):
+        for dirpath, _, names in os.walk(os.path.join(root, sub)):
+            files += [os.path.join(dirpath, n) for n in names if n.endswith(".py")]
+    offenders = []
+    for path in files:
+        with open(path, encoding="utf-8") as fh:
+            if root in fh.read():
+                offenders.append(os.path.relpath(path, root))
+    assert offenders == [], f"hard-coded checkout path in: {offenders}"

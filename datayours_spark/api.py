@@ -12,15 +12,22 @@ instead of the HTTP endpoints:
 - `find(query)` / `expand(query)` / `index()` — the /metrics endpoints.
 
 Scale notes: one distributed plan serves ALL matched series (the reference
-loops per leaf).  A render collects its matched leaf list ONCE — one
-filter over the series catalog, at most ``max_points + 1`` rows — and
-never scans the catalog again: the cap arithmetic reads the list's length,
-the fetch filters the datapoints on ``path IN (list)`` plus the ts range
-(both reach the parquet scan), and the dense leaves × slots grid is a
-JVM-side literal left-joined against the LWW slots.  The result is
-bounded by ``max_points`` like the reference's points-per-query cap, so it
-is collected unsorted and ordered on the driver, where the render text is
-assembled exactly as CGI response assembly was.
+loops per leaf).  The render entry points take a ``catalog`` (see
+:func:`catalog_paths`): a path list is matched on the driver with no Spark
+job, a DataFrame with a ``path`` column (e.g. the ingest-maintained
+``series_stats()``) is collected once, and ``None`` keeps the distributed
+``SELECT DISTINCT path`` over the datapoints.  A `GraphiteApp` resolves its
+catalog once and passes the list to every render.  A render resolves its
+matched leaf list ONCE — with ``catalog=None`` one filter over the series
+catalog, at most ``max_points + 1`` rows — and never scans the catalog
+again: the cap arithmetic reads the list's length, the fetch filters the
+datapoints on ``path IN (list)`` plus the ts range (both reach the parquet
+scan), and the dense leaves × slots grid is a JVM-side literal unioned
+into the LWW slot aggregate as null-ordered rows, so it densifies the
+output without a join.  The result is bounded by ``max_points`` like the
+reference's points-per-query cap, so it is collected unsorted and ordered
+on the driver, where the render text is assembled exactly as CGI response
+assembly was.
 """
 
 from __future__ import annotations
@@ -38,6 +45,18 @@ from datayours_spark.operators.catalog import (
 )
 from datayours_spark.operators.fetch import lww_slots, slot_sequence
 from datayours_spark.render.formats import fetched_to_series, render_csv, render_json
+
+
+def catalog_paths(catalog: list[str] | DataFrame | None) -> list[str] | None:
+    """The one catalog rule the render entry points share: a path list is
+    used as is; a DataFrame with a ``path`` column (e.g. the
+    ingest-maintained ``series_stats()``, a KB-scale relation) is collected
+    once into a sorted distinct list; ``None`` stays ``None``, and the
+    caller takes the distributed path over ``series_catalog(datapoints)``."""
+    if isinstance(catalog, DataFrame):
+        return sorted(r["path"] for r in catalog.select("path").distinct().collect())
+    return catalog
+
 
 def find(
     datapoints: DataFrame, query: str, format: str = "df"
@@ -73,6 +92,23 @@ def index(datapoints: DataFrame) -> DataFrame:
     from datayours_spark.operators.catalog import index_json
 
     return index_json(series_catalog(datapoints))
+
+
+def _match_leaves(
+    datapoints: DataFrame,
+    targets: list[str],
+    catalog: list[str] | DataFrame | None,
+    limit: int | None,
+) -> list[str]:
+    """The sorted leaves any target matches.  With a catalog they are
+    matched on the driver (:func:`catalog_paths`), one pass over the list
+    per target; with ``None`` the globs push into the distinct scan as one
+    filter, so only matched leaves (at most ``limit`` of them) reach the
+    driver."""
+    paths = catalog_paths(catalog)
+    if paths is None:
+        return collect_leaf_paths(series_catalog(datapoints), targets, limit)
+    return sorted({p for t in targets for p in find_leaf_paths(paths, t)})
 
 
 class RenderCapExceeded(ValueError):
@@ -120,23 +156,31 @@ def render_grid(
     null_policy: str = "null",
     max_points: int | None = 10_080,
     on_exceed: str = "coarsen",
+    catalog: list[str] | DataFrame | None = None,
 ) -> DataFrame:
     """The distributed heart of /render: (path, slot, value) dense grids for
     every leaf matched by any target, nulls where no point landed.
 
-    The matched leaves are resolved with one collect
-    (:func:`~datayours_spark.operators.catalog.collect_leaf_paths`: every
-    target's leaf condition OR-ed into one catalog filter), and the list
-    drives the rest: the fetch filters on ``path IN (list)`` and the
-    ts range, which reach the parquet scan; the dense grid is one literal
-    (``explode`` over the path array, then the slot ``sequence``)
-    left-joined to the LWW slots; ``apply_null_policy`` fills the nulls.
+    The matched leaves are resolved once: from a ``catalog`` list or
+    DataFrame on the driver (:func:`catalog_paths`), or with ``None`` by one
+    collect (:func:`~datayours_spark.operators.catalog.collect_leaf_paths`:
+    every target's leaf condition OR-ed into one catalog filter).  The list
+    drives the rest: the fetch filters on ``path IN (list)`` and the ts
+    range, which reach the parquet scan; the dense grid is one literal
+    (``explode`` over the path array, then the slot ``sequence``) unioned
+    into the slot aggregate's input as ``(path, slot, NULL, NULL)`` rows.
+    ``max_by`` skips rows whose ordering is null, so a grid row never beats
+    a real point and a slot with no point comes out null; the ts filter
+    keeps every data slot inside the grid, so the aggregate's output is
+    exactly the grid, with no join.  ``apply_null_policy`` fills the nulls.
     No target matching a leaf gives an empty (path, slot, value) frame.
 
     ``max_points`` bounds the result to len(matched leaves) × slot count —
     the reference's points-per-query guard (`dataMineServer maxpoints`,
-    SURVEY §2.4 O4) applied BEFORE anything materializes: the leaf collect
-    stops at ``max_points + 1`` rows, the slot count is arithmetic.  The
+    SURVEY §2.4 O4) applied BEFORE anything materializes: with
+    ``catalog=None`` the leaf collect stops at ``max_points + 1`` rows (a
+    given catalog is already on the driver, whole), the slot count is
+    arithmetic.  The
     default is the reference's own default bound (10080, a week of minutes
     — `L_DataBaseDM.lua:74`); pass ``None`` to disable, a larger int to
     raise.  On overflow, ``on_exceed='coarsen'`` multiplies the step by the
@@ -155,8 +199,8 @@ def render_grid(
     frm = default_from if from_ is None else parse_time(from_, now=now_ts)
     until = default_until if until_ is None else parse_time(until_, now=now_ts)
 
-    paths = collect_leaf_paths(
-        series_catalog(datapoints), targets,
+    paths = _match_leaves(
+        datapoints, targets, catalog,
         None if max_points is None else max_points + 1,
     )
     if not paths:
@@ -179,17 +223,18 @@ def render_grid(
 
     lo = frm - frm % step
     hi = until - until % step
-    slots = lww_slots(
-        datapoints.where(
-            F.col("path").isin(paths) & F.col("ts_sec").between(lo, hi + step - 1)
-        ),
-        step,
-    )
+    points = datapoints.where(
+        F.col("path").isin(paths) & F.col("ts_sec").between(lo, hi + step - 1)
+    ).select("path", "ts_sec", "ts_us", "value")
+    # the null columns take the points' types in the union
     grid = spark.range(1).select(F.explode(F.lit(paths)).alias("path")).select(
-        "path", F.explode(slot_sequence(frm, until, step)).alias("slot")
+        "path",
+        F.explode(slot_sequence(frm, until, step)).alias("ts_sec"),
+        F.lit(None).alias("ts_us"),
+        F.lit(None).alias("value"),
     )
-    out = grid.join(slots, ["path", "slot"], "left")
-    return apply_null_policy(out, null_policy, partition_cols=["path"]).select(
+    slots = lww_slots(points.unionByName(grid), step)
+    return apply_null_policy(slots, null_policy, partition_cols=["path"]).select(
         "path", "slot", "value"
     )
 
@@ -203,7 +248,7 @@ def render_mixed(
     until_: str | int | None = None,
     now: int | None = None,
     max_leaves: int = 1_000,
-    catalog: "DataFrame | list[str] | None" = None,
+    catalog: list[str] | DataFrame | None = None,
 ) -> DataFrame:
     """Mixed-timebase /render (the reference's "mixed timebase support",
     `L_DataGraph.lua:205-254`): same target glob/brace expansion and time
@@ -217,12 +262,12 @@ def render_mixed(
     (it parameterizes per-spec routing), so it is capped at `max_leaves` —
     :class:`RenderCapExceeded` past that.
 
-    ``catalog`` injects the series catalog — the ingest-maintained stats
-    table (`IngestPipeline.series_stats()`, a KB-scale relation) or a plain
-    list of paths — so target resolution never scans the datapoints table;
-    the default derives the catalog from `datapoints` by distinct, which is
-    a full-column scan at collect time (fine for ad-hoc use, wrong as the
-    standing configuration at 100 TB).
+    ``catalog`` injects the series catalog (:func:`catalog_paths`) — the
+    ingest-maintained stats table (`IngestPipeline.series_stats()`, a
+    KB-scale relation) or a plain list of paths — so target resolution
+    never scans the datapoints table; the default derives the catalog from
+    `datapoints` by distinct, which is a full-column scan at collect time
+    (fine for ad-hoc use, wrong as the standing configuration at 100 TB).
     """
     import time as _time
 
@@ -235,29 +280,9 @@ def render_mixed(
     frm = default_from if from_ is None else parse_time(from_, now=now_ts)
     until = default_until if until_ is None else parse_time(until_, now=now_ts)
 
-    # target resolution: the matched leaf list parameterizes per-spec
-    # routing, so it ends up on the driver either way.
-    # - catalog injected (stats table or plain path list): resolve
-    #   DRIVER-side via find_leaf_paths (differential-tested against the
-    #   distributed find_nodes) — with a path list this plans zero Spark
-    #   jobs; a stats-table DataFrame costs one KB-scale collect.
-    # - catalog=None: the distributed collect_leaf_paths — the globs push
-    #   into the distinct scan as one filter, so only MATCHED leaves (at
-    #   most max_leaves + 1 of them) ever reach the driver.
-    if catalog is None:
-        paths = collect_leaf_paths(
-            series_catalog(datapoints), targets, max_leaves + 1
-        )
-    else:
-        if isinstance(catalog, DataFrame):
-            catalog_paths = [
-                r["path"] for r in catalog.select("path").distinct().collect()
-            ]
-        else:
-            catalog_paths = list(catalog)
-        paths = sorted(
-            {p for t in targets for p in find_leaf_paths(catalog_paths, t)}
-        )
+    # the matched leaf list parameterizes per-spec routing, so it ends up
+    # on the driver either way
+    paths = _match_leaves(datapoints, targets, catalog, max_leaves + 1)
     if len(paths) > max_leaves:
         raise RenderCapExceeded(
             f"more than max_leaves={max_leaves} matched leaves"
@@ -277,6 +302,7 @@ def render(
     null_policy: str = "null",
     max_points: int | None = 10_080,
     on_exceed: str = "coarsen",
+    catalog: list[str] | DataFrame | None = None,
 ) -> str | DataFrame:
     """/render — Graphite-format output text for every matching series.
 
@@ -284,10 +310,11 @@ def render(
     lines; 'df' → the (path, slot, value) grid DataFrame for further
     composition.  `max_points` defaults to the reference's 10080 bound
     (`L_DataBaseDM.lua:74`, see :func:`render_grid`); pass None to disable.
+    ``catalog`` follows :func:`catalog_paths`.
     """
     grid = render_grid(
         spark, datapoints, targets, from_, until_, step, now, null_policy,
-        max_points=max_points, on_exceed=on_exceed,
+        max_points=max_points, on_exceed=on_exceed, catalog=catalog,
     )
     if format == "df":
         return grid

@@ -22,20 +22,35 @@ Reproduces `graphite_cgi.lua`'s envelope byte-for-byte where it is defined:
   handler exceptions → HTTP 500 with an empty body (`:494-498`).
 
 The app is a plain WSGI callable — run it under any WSGI server
-(wsgiref for tests; gunicorn/uwsgi in production).  Every request plans
-against the engine's DataFrames; the Spark session and datapoints relation
-are bound at construction.
+(wsgiref for tests; gunicorn/uwsgi in production).  The Spark session and
+datapoints relation are bound at construction, and the relation's parquet
+file listing is fixed when its DataFrame is created, so an app serves one
+snapshot.  Its series catalog therefore cannot change either: the app
+resolves it once, on first use, into a sorted driver-side path list, and
+serves /metrics/find, /metrics/expand and /metrics/index.json from that
+list with no Spark job, and /render's target resolution likewise.  To see
+new data, build a new app over a fresh read.  The list holds every series
+path on the driver, and each find or render target is one regex pass over
+it, about 2 µs per path on one core (0.2 s a target at 100k paths, on a
+4-core x86 host): the per-request cost grows with the catalog, so this
+form is sized for catalogs of up to about 10^5 series.
 """
 
 from __future__ import annotations
 
 import json
+import threading
 from typing import Callable
 from urllib.parse import unquote_plus
 
 from pyspark.sql import DataFrame, SparkSession
 
 from datayours_spark import api
+from datayours_spark.operators.catalog import (
+    expand_paths,
+    find_node_rows,
+    series_catalog,
+)
 from datayours_spark.render.formats import find_completer, find_treejson
 
 
@@ -95,7 +110,12 @@ def get_parameters(environ: dict) -> dict:
 
 class GraphiteApp:
     """WSGI application binding the dispatch table to one datapoints
-    relation (what the reference binds to its Whisper storage)."""
+    relation (what the reference binds to its Whisper storage).
+
+    The app serves the one snapshot that relation listed, so its series
+    catalog (``series_catalog(datapoints)``) is collected once, on first
+    use (:meth:`catalog`), and reused by every request.
+    """
 
     def __init__(
         self,
@@ -108,6 +128,8 @@ class GraphiteApp:
     ):
         self.spark = spark
         self.datapoints = datapoints
+        self._catalog: list[str] | None = None
+        self._catalog_lock = threading.Lock()  # one collect under a threaded server
         self.step = step
         self.now = now  # fixed "now" for deterministic tests; None = wall clock
         self.dm_dir = dm_dir  # dataMine DB for the lr_dmDB data_request
@@ -130,6 +152,13 @@ class GraphiteApp:
             "/data_request": self.data_request,
         }
 
+    def catalog(self) -> list[str]:
+        """The app's sorted series paths, resolved on first use."""
+        with self._catalog_lock:
+            if self._catalog is None:
+                self._catalog = api.catalog_paths(series_catalog(self.datapoints))
+            return self._catalog
+
     # -- endpoint handlers: (params) -> (body, status, content_type) --
 
     def metrics_find(self, p: dict):
@@ -139,8 +168,7 @@ class GraphiteApp:
                 {"errors": {"query": "this parameter is required."}},
                 400, p.get("jsonp"),
             )
-        nodes = api.find(self.datapoints, query)
-        rows = [(r["path"], r["name"], r["is_leaf"]) for r in nodes.collect()]
+        rows = find_node_rows(self.catalog(), query)
         if p.get("format") == "completer":
             return jsonify(find_completer(rows), 200, p.get("jsonp"))
         return jsonify(find_treejson(rows), 200, p.get("jsonp"))
@@ -152,16 +180,11 @@ class GraphiteApp:
                 {"errors": {"query": "this parameter is required."}},
                 400, p.get("jsonp"),
             )
-        leaves_only = p.get("leavesOnly") == "1"
-        paths = [
-            r["path"]
-            for r in api.expand(self.datapoints, query, leaves_only).collect()
-        ]
+        paths = expand_paths(self.catalog(), query, p.get("leavesOnly") == "1")
         return jsonify({"results": paths}, 200, p.get("jsonp"))
 
     def metrics_index(self, p: dict):
-        paths = [r["path"] for r in api.index(self.datapoints).collect()]
-        return jsonify(paths, 200, p.get("jsonp"))
+        return jsonify(self.catalog(), 200, p.get("jsonp"))
 
     def render(self, p: dict):
         fmt = p.get("format", "svg")
@@ -178,6 +201,7 @@ class GraphiteApp:
             step=self.step,
             now=self.now,
             format=fmt,
+            catalog=self.catalog(),
         )
         if fmt == "csv":
             # text/plain, NOT text/csv — `graphite_cgi.lua:337`

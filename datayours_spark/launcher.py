@@ -121,8 +121,9 @@ class DataYoursStack:
     def graphite_app(self, step: int = 3_600, now: int | None = None):
         """A GraphiteApp over the CURRENT table state.  Parquet file
         listings snapshot at DataFrame creation, so serving constructs a
-        fresh view per app — run one app per request wave, or rebuild
-        after ingest batches."""
+        fresh view per app, and the app resolves its series catalog once
+        from that view — run one app per request wave, or rebuild after
+        ingest batches."""
         from datayours_spark.http import GraphiteApp
 
         return GraphiteApp(

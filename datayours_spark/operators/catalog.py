@@ -11,12 +11,19 @@ federation/dedup; `graphite_cgi.lua:225-301` endpoint shapes):
   leaf as-is (`L_DataGraphiteAPI.lua:355-388`).
 - `/metrics/index.json` is every leaf path, sorted (`graphite_cgi.lua:285-301`).
 
-Scale notes: the catalog is `SELECT DISTINCT path` — one shuffle over the
-series dimension (small relative to datapoints; at 100 TB the distinct paths
-come from the ingest-maintained `series_stats` table, which
-`api.render_mixed(catalog=...)` already accepts, and this scan disappears —
-ROADMAP item 2's read side).  Glob translation happens driver-side (tiny),
-pushed down as `rlike` filters.
+Scale notes: each operator comes in two forms.  The distributed one
+(:func:`find_nodes`, :func:`expand_query`, :func:`collect_leaf_paths`)
+starts from `SELECT DISTINCT path` — one shuffle over the series
+dimension — with the glob translated driver-side and pushed down as
+`rlike` filters.  The driver-side one (:func:`find_node_rows`,
+:func:`expand_paths`, :func:`find_leaf_paths`) matches a path list held on
+the driver, level by level like the reference's finders, and runs no
+Spark job; it is differential-tested against the distributed form.  A
+`GraphiteApp` collects the distinct scan into such a list once and serves
+every find, expand, index and render target from it.  Reading the
+KB-scale ingest-maintained stats table (`series_stats()`) instead of that
+scan is the form that stays cheap at 100 TB; it is not wired into the app
+yet.
 """
 
 from __future__ import annotations
@@ -32,15 +39,15 @@ def series_catalog(datapoints: DataFrame) -> DataFrame:
     return datapoints.select("path").distinct()
 
 
-def find_leaf_paths(paths, pattern: str) -> list[str]:
-    """Driver-side leaf resolution: the subset of `paths` that are leaves
-    matching `pattern` — byte-identical to
-    ``find_nodes(catalog, pattern).where(is_leaf)`` (differential-tested).
+def find_node_rows(paths, pattern: str) -> list[tuple[str, str, bool]]:
+    """Driver-side find: (path, name, is_leaf) node rows for `pattern` over
+    the series paths `paths` — identical to ``find_nodes(catalog,
+    pattern).collect()`` (differential-tested), branch row before leaf row
+    for a prefix that is both.
 
     This is the reference's own find shape (directory listing + per-level
     pattern match, `L_DataFinders.lua:162-189`) for callers that already
-    hold the catalog driver-side — e.g. target resolution against the
-    ingest-maintained stats table, where spinning up a distributed
+    hold the catalog driver-side, where spinning up a distributed
     aggregation to match ~series-count strings would cost more than the
     match.  `paths` is any iterable of dotted series paths.
     """
@@ -48,12 +55,34 @@ def find_leaf_paths(paths, pattern: str) -> list[str]:
 
     n = len(expand_braces(pattern)[0].split("."))
     regexes = [_re.compile(r) for r in glob_path_to_regex(pattern)]
+    kinds: dict[str, set[bool]] = {}
+    for p in paths:
+        parts = p.split(".")
+        if len(parts) < n:
+            continue
+        prefix = ".".join(parts[:n])
+        if any(rx.match(prefix) for rx in regexes):
+            kinds.setdefault(prefix, set()).add(len(parts) == n)
+    return [
+        (prefix, prefix.rsplit(".", 1)[-1], leaf)
+        for prefix in sorted(kinds)
+        for leaf in sorted(kinds[prefix])
+    ]
+
+
+def find_leaf_paths(paths, pattern: str) -> list[str]:
+    """Driver-side leaf resolution: the sorted subset of `paths` that are
+    leaves matching `pattern` (the leaf rows of :func:`find_node_rows`)."""
+    return [p for p, _, leaf in find_node_rows(paths, pattern) if leaf]
+
+
+def expand_paths(paths, pattern: str, leaves_only: bool = False) -> list[str]:
+    """Driver-side `/metrics/expand` over a path list — identical to
+    ``expand_query(catalog, pattern, leaves_only)`` (differential-tested)."""
     return sorted(
-        {
-            p
-            for p in paths
-            if len(p.split(".")) == n and any(rx.match(p) for rx in regexes)
-        }
+        p if leaf else p + "."
+        for p, _, leaf in find_node_rows(paths, pattern)
+        if leaf or not leaves_only
     )
 
 

@@ -109,3 +109,51 @@ class TestFindLeafPaths:
         assert collect_leaf_paths(catalog, targets) == want
         # the limit caps what reaches the driver, not which leaves match
         assert len(collect_leaf_paths(catalog, targets, limit=2)) == 2
+
+
+class TestDriverSideFind:
+    """The driver-side find and expand a `GraphiteApp` serves from must be
+    identical to the distributed forms over the same catalog, order
+    included (``system.*`` covers a prefix that is both branch and leaf)."""
+
+    def test_matches_distributed(self, spark):
+        from functools import reduce
+
+        from pyspark.sql import DataFrame
+        from pyspark.sql import functions as F
+
+        from datayours_spark.operators.catalog import expand_paths, find_node_rows
+
+        # every distributed answer in one collect, keyed (pattern, form);
+        # find_nodes and expand_query order by path (then is_leaf), which
+        # the driver-side sort below restores.  The catalog is a JVM-side
+        # literal, so the 27 scans start no Python worker.
+        catalog = spark.range(1).select(F.explode(F.lit(PATHS)).alias("path"))
+        frames = []
+        for i, pattern in enumerate(TestFindLeafPaths.PATTERNS):
+            frames.append(find_nodes(catalog, pattern).select(
+                F.lit(i).alias("i"), F.lit("find").alias("form"),
+                "path", "name", "is_leaf",
+            ))
+            for form in ("expand", "leaves"):
+                frames.append(expand_query(catalog, pattern, form == "leaves").select(
+                    F.lit(i), F.lit(form), "path",
+                    F.lit(None).cast("string"), F.lit(None).cast("boolean"),
+                ))
+        got: dict = {}
+        for r in reduce(DataFrame.unionAll, frames).collect():
+            got.setdefault((r["i"], r["form"]), []).append(tuple(r)[2:])
+
+        for i, pattern in enumerate(TestFindLeafPaths.PATTERNS):
+            want = sorted(got.get((i, "find"), []))
+            assert find_node_rows(PATHS, pattern) == want, pattern
+            for form in ("expand", "leaves"):
+                want = sorted(p for p, _, _ in got.get((i, form), []))
+                assert expand_paths(PATHS, pattern, form == "leaves") == want, (pattern, form)
+
+    def test_branch_row_before_leaf_row(self):
+        from datayours_spark.operators.catalog import find_node_rows
+
+        assert find_node_rows(reversed(PATHS), "system.*") == [
+            ("system.cpu", "cpu", False), ("system.cpu", "cpu", True),
+        ]

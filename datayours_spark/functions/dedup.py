@@ -26,7 +26,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from datayours_spark.io import one_job_collect
+from datayours_spark.io import _observed_or_count, one_job_collect
 
 #: prime just above 2^32 — modulus for the permutation universe
 MINHASH_PRIME = 4_294_967_311
@@ -535,39 +535,6 @@ def minhash_dedup(
     )
     cand = lsh_candidate_pairs(sigs, bands, rows, collapse_identical=collapse_identical)
     return jaccard_pairs(cand, docs).where(F.col("jaccard") >= threshold)
-
-
-def _observed_or_count(obs, key: str, df: DataFrame, timeout: float = 5.0):
-    """Read an :class:`Observation` metric that should already be
-    available (its action just completed), guarded so a hang cannot
-    occur: ``Observation.get`` blocks indefinitely when the
-    materializing action was not tracked as a SQL execution (ADVICE r15
-    — classic-mode-only pattern, sensitive to ``localCheckpoint`` no
-    longer running as a tracked action).  On timeout warn and fall back
-    to ``df.count()`` — one cheap job over the just-checkpointed
-    blocks."""
-    import threading as _th
-    import warnings
-
-    box: dict = {}
-
-    def _read() -> None:
-        box["v"] = obs.get
-
-    # daemon thread: a pathologically hung Observation.get can neither
-    # block this caller nor interpreter exit
-    t = _th.Thread(target=_read, daemon=True)
-    t.start()
-    t.join(timeout)
-    if "v" in box:
-        return int(box["v"][key])
-    warnings.warn(
-        f"Observation metric {key!r} not available after {timeout}s; "
-        "falling back to df.count()",
-        RuntimeWarning,
-        stacklevel=2,
-    )
-    return int(df.count())
 
 
 def dup_clusters(

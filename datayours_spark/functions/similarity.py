@@ -867,6 +867,10 @@ def _training_exec_conf(spark, n_rows: int):
     return conf_scope(spark, _TRAINING_CONFS)
 
 
+#: schema of a coarse-quantizer table (:func:`kmeans_centroids`)
+CENTROID_SCHEMA = "centroid_id int, cv array<double>, cnorm double"
+
+
 def kmeans_centroids(
     emb: DataFrame,
     k: int = 8,
@@ -877,7 +881,28 @@ def kmeans_centroids(
     round_dp: int = 6,
 ) -> DataFrame:
     """Deterministic DataFrame k-means coarse quantizer:
-    (centroid_id, cv, cnorm).
+    (centroid_id, cv, cnorm) — :func:`kmeans_centroid_rows` as a
+    one-partition relation, for callers that join or broadcast it.
+    Callers that want the model state on the driver take the rows
+    instead: collecting this relation back is a Python-worker job."""
+    return small_df(
+        emb.sparkSession,
+        kmeans_centroid_rows(emb, k, iters, seed, id_col, vec_col, round_dp),
+        CENTROID_SCHEMA,
+    )
+
+
+def kmeans_centroid_rows(
+    emb: DataFrame,
+    k: int = 8,
+    iters: int = 3,
+    seed: int = 42,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    round_dp: int = 6,
+) -> list[tuple[int, list[float], float]]:
+    """Deterministic k-means coarse quantizer as driver-side model
+    state: one (centroid_id, cv, cnorm) tuple per centroid, in id order.
 
     Engine-portable by construction (the DuckDB oracle replays the exact
     iterations):
@@ -898,10 +923,11 @@ def kmeans_centroids(
     (csim, -centroid_id) structs — no broadcast join, no window, no
     shuffle), fused with the per-(cluster, dim) mean aggregation into a
     single groupBy whose k×d result is collected back into the model
-    state.  The round-3 shape (broadcast join + row_number window + two
-    aggregations + a localCheckpoint per iteration, ~3 jobs each) measured
-    ~2× slower; arithmetic is unchanged (sequential-fold dot, 9-dp cosine,
-    identical tie-breaks) so the oracle replay is bit-identical.
+    state, which is returned as is.  The round-3 shape (broadcast join +
+    row_number window + two aggregations + a localCheckpoint per
+    iteration, ~3 jobs each) measured ~2× slower; arithmetic is unchanged
+    (sequential-fold dot, 9-dp cosine, identical tie-breaks) so the
+    oracle replay is bit-identical.
     """
     # materialize (vec_id, v, nrm) ONCE: every Lloyd iteration re-reads the
     # vectors for the fused assignment+means pass — without the cut each
@@ -979,11 +1005,7 @@ def kmeans_centroids(
         import math
 
         return math.sqrt(acc)
-    return small_df(
-        emb.sparkSession,
-        [(cid, cv, _norm(cv)) for cid, cv in cents],
-        "centroid_id int, cv array<double>, cnorm double",
-    )
+    return [(cid, cv, _norm(cv)) for cid, cv in cents]
 
 
 def ivf_assign(
@@ -2414,24 +2436,22 @@ def ivf_assign_pruned(
     import math as _math
 
     s = max(int(_math.ceil(_math.sqrt(k))), 1)
-    super_cent = kmeans_centroids(
+    super_rows = kmeans_centroid_rows(
         cent_emb, k=s, iters=super_iters, seed=seed
     )
+    super_cent = small_df(emb.sparkSession, super_rows, CENTROID_SCHEMA)
     c2s = ivf_assign(cent_emb, super_cent)  # (centroid_id, super) — k rows
     occupied_supers = {
         int(r["cluster"]) for r in c2s.select("cluster").distinct().collect()
     }
-    srows = [
-        r for r in super_cent.collect()
-        if int(r["centroid_id"]) in occupied_supers
-    ]
     sup_arr = F.array(*[
         F.struct(
-            F.lit(int(r["centroid_id"])).alias("sid"),
-            F.array(*[F.lit(float(x)) for x in r["cv"]]).alias("sv"),
-            F.lit(float(r["cnorm"])).alias("snorm"),
+            F.lit(sid).alias("sid"),
+            F.array(*[F.lit(x) for x in sv]).alias("sv"),
+            F.lit(snorm).alias("snorm"),
         )
-        for r in srows
+        for sid, sv, snorm in super_rows
+        if sid in occupied_supers
     ])
     vecs = emb.select(
         F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("v")

@@ -35,30 +35,6 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 FINGERPRINT_MOD = 1_000_000_007
 
 
-def whitespace_token_count(text_col: str) -> Column:
-    return F.size(F.split(text_col, " "))
-
-
-def bpe_token_count(text_col: str) -> Column:
-    """Count of BPE-ish pre-tokens via regexp extraction."""
-    return F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_TOKEN_REGEX), 0))
-
-
-def quality_score(text_col: str) -> Column:
-    """Heuristic quality in [0,1]: length band + punctuation + short-token
-    ratios (the usual cheap pre-filter before model-based scoring)."""
-    toks = F.split(text_col, " ")
-    n = F.size(toks)
-    n_chars = F.length(text_col)
-    punct = F.length(F.regexp_replace(text_col, r"[^.,;:!?]", ""))
-    short = F.size(F.filter(toks, lambda w: F.length(w) <= 2))
-    length_ok = F.when((n >= 10) & (n <= 1000), 1.0).otherwise(0.3)
-    punct_ratio = punct / F.greatest(n_chars, F.lit(1))
-    short_ratio = short / F.greatest(n, F.lit(1))
-    score = length_ok - 0.5 * punct_ratio - 0.3 * short_ratio
-    return F.round(F.greatest(F.least(score, F.lit(1.0)), F.lit(0.0)), 4)
-
-
 def lang_scores(text_col: str) -> list[tuple[str, Column]]:
     """Per-language profile hit ratios (stopword-profile LID heuristic)."""
     toks = F.split(text_col, " ")

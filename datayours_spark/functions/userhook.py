@@ -44,17 +44,6 @@ def apply_user_hook(datapoints: DataFrame, hook: HookFn) -> DataFrame:
     )
 
 
-def example_bounds_hook(lo: float, hi: float) -> HookFn:
-    """The reference's documented example: drop out-of-bounds values
-    (`L_DataUser.lua:44-60` bounds-checking illustration)."""
-
-    def hook(path: str, value: float, ts: int):
-        if lo <= value <= hi:
-            yield (path, value, ts)
-
-    return hook
-
-
 def example_derive_hook(threshold: float) -> HookFn:
     """0..N emission demo: pass every record through and additionally emit a
     `<path>.high` marker record when the value crosses a threshold."""

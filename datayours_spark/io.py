@@ -21,7 +21,7 @@ import os
 import threading
 from contextlib import nullcontext
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from datayours_spark.session import conf_scope, configure_session
@@ -231,10 +231,6 @@ def events_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-
-
 #: the engine's one session cache, see :func:`session_cached`:
 #: (applicationId, sf_dir, table, part) → (input identity, value)
 _SESSION_CACHE: dict[tuple, tuple] = {}
@@ -348,6 +344,38 @@ def read_datapoints(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir)
 
 
+def _observed_or_count(obs, key: str, df: DataFrame, timeout: float = 5.0):
+    """Read an :class:`Observation` metric that should already be
+    available (its action just completed), guarded so a hang cannot
+    occur: ``Observation.get`` blocks indefinitely when the
+    materializing action was not tracked as a SQL execution (ADVICE r15
+    — classic-mode-only pattern, sensitive to ``localCheckpoint`` no
+    longer running as a tracked action).  On timeout warn and fall back
+    to ``df.count()``, where ``df`` holds the rows the metric counted
+    (just-checkpointed blocks, say, or a write's input)."""
+    import warnings
+
+    box: dict = {}
+
+    def _read() -> None:
+        box["v"] = obs.get
+
+    # daemon thread: a pathologically hung Observation.get can neither
+    # block this caller nor interpreter exit
+    t = threading.Thread(target=_read, daemon=True)
+    t.start()
+    t.join(timeout)
+    if "v" in box:
+        return int(box["v"][key])
+    warnings.warn(
+        f"Observation metric {key!r} not available after {timeout}s; "
+        "falling back to df.count()",
+        RuntimeWarning,
+        stacklevel=2,
+    )
+    return int(df.count())
+
+
 def compact_datapoints(spark: SparkSession, table_dir: str) -> int:
     """LWW compaction: collapse the append-only datapoints table to one row
     per (path, second) — the Delta-MERGE shape without Delta.
@@ -387,13 +415,20 @@ def compact_datapoints(spark: SparkSession, table_dir: str) -> int:
         .select("path", "ts_sec", *keep, "value", "date")
     )
     tmp = table_dir.rstrip("/") + ".compacting"
+    # the row count rides the compaction write instead of re-reading the
+    # table it just wrote (listing, footers and a count job)
+    obs = Observation()
     (
-        winners.repartition("date")
+        winners.observe(obs, F.count(F.lit(1)).alias("n"))
+        .repartition("date")
         .sortWithinPartitions("path", "ts_sec")
         .write.mode("overwrite")
         .partitionBy("date")
         .parquet(tmp)
     )
+    # the fallback recounts the winners while the live table still holds
+    # them, before the swap below retires it
+    n_rows = _observed_or_count(obs, "n", winners)
     import shutil
 
     # crash-safe swap: rename the live table ASIDE first, then promote the
@@ -405,7 +440,7 @@ def compact_datapoints(spark: SparkSession, table_dir: str) -> int:
     os.rename(table_dir, old)
     os.rename(tmp, table_dir)
     shutil.rmtree(old)
-    return spark.read.parquet(table_dir).count()
+    return n_rows
 
 
 def expire_retention(table_dir: str, max_retention: int, now: int) -> list[str]:

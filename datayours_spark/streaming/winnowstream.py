@@ -832,12 +832,6 @@ def standing_index_view(
     return base.unionByName(tail_lww)
 
 
-def standing_counts_view(store: BatchStore) -> DataFrame:
-    """The LWW standing per-doc fingerprint-count view (docs-sized)."""
-    comp, tail = store.read_split("counts", COUNTS_SCHEMA)
-    return _index_lww_split(comp, tail)
-
-
 def write_index_batch(
     batch_fp: DataFrame, batch_id: int, dest: str, buckets: int
 ) -> None:

@@ -111,6 +111,34 @@ def test_rewritten_table_is_rebuilt(spark, tmp_path):
     assert after != before
 
 
+def test_pipeline_run_shared_and_rebuilt(spark, tmp_path):
+    """The two pipeline_compose queries share one pipeline run per table:
+    after documents.parquet is rewritten under the same sf_dir, the run
+    is rebuilt (the old manifest is not served), and the manifest read
+    after q_pipeline_payload (in ``ref``) equals the one built cold by
+    q_ingest_pipeline alone (in ``live``)."""
+    src = f"{SF_DIR}/documents.parquet"
+    live, ref = tmp_path / "live", tmp_path / "ref"
+    live.mkdir()
+    ref.mkdir()
+    shutil.copy(src, live / "documents.parquet")
+    registry = E.queries()
+    ingest = registry["q_ingest_pipeline"]
+    before = _rows(ingest(spark, str(live)))
+
+    docs = pq.read_table(src).to_pandas()
+    docs = docs[docs.doc_id < 400].reset_index(drop=True)
+    for d in (live, ref):
+        docs.to_parquet(d / "documents.parquet", index=False)
+
+    assert registry["q_pipeline_payload"](spark, str(ref)).count() > 0
+    shared = _rows(ingest(spark, str(ref)))
+    cold = _rows(ingest(spark, str(live)))
+    assert cold == shared
+    assert cold != before
+    assert len(cold) > 0
+
+
 def test_foreign_session_entries_dropped(spark):
     """Entries of another applicationId (a stopped session) are dropped
     by the next call, whatever table or part it asks for."""

@@ -33,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from datayours_spark.io import read_datapoints, write_datapoints
+from datayours_spark.io import load_table, read_datapoints, write_datapoints
 from datayours_spark.operators.fetch import fetch_grid, lww_slots
 from datayours_spark.operators.rollup import rollup
 from datayours_spark.session import get_spark
@@ -700,7 +700,30 @@ def main() -> None:
     # broadcast a corpus-sized id set); the drop-set anti-join
     # hash-shuffles instead of sorting the survivor scan; the pack
     # window partitions by shard (never an empty partitionSpec).
+    # Both pipeline_compose queries read one session pipeline run
+    # (`_pipeline_run`) whose manifest is localCheckpoint-ed, so
+    # q_ingest_pipeline's own plan is that checkpointed scan.  The
+    # lineage the run checkpoints is pinned on the same composition
+    # built without the vocab, where the manifest stays un-checkpointed.
+    from datayours_spark.streaming.pipeline import ingest_pipeline_batch
+
     plan = plan_of(registry["q_ingest_pipeline"](spark, SF_DIR))
+    check(
+        "pipeline manifest query reads the checkpointed run",
+        "Scan ExistingRDD" in plan and "windowspecdefinition" not in plan,
+    )
+    all_docs = load_table(spark, SF_DIR, "documents").select(
+        "doc_id", "text", "source"
+    )
+    is_eval = F.col("doc_id") % entrymod.FUZZY_EVAL_MOD == 0
+    plan = plan_of(ingest_pipeline_batch(
+        all_docs.where(~is_eval), min_words=entrymod.PIPE_MIN_WORDS,
+        k=entrymod.WINNOW_K, w=entrymod.WINNOW_W,
+        threshold=entrymod.WINNOW_T, shards=entrymod.PACK_SHARDS,
+        capacity=entrymod.PACK_CAPACITY, gate_cols=entrymod.PIPE_GATE_COLS,
+        eval_docs=all_docs.where(is_eval).select("doc_id", "text"),
+        decon_threshold=entrymod.WINNOW_T,
+    )[4])
     check(
         "pipeline gate filters in-scan (no semi-join back to docs)",
         "LeftSemi" not in plan,
@@ -727,8 +750,7 @@ def main() -> None:
     # ingest_pipeline_batch (narrow decision table, computed once for
     # the manifest + payload branches instead of twice), so the
     # shard-partitioned pack window no longer appears in THIS plan —
-    # it is pinned above on q_ingest_pipeline, which shares the
-    # composition.  Here we pin what remains protective: the manifest
+    # it is pinned above on the un-checkpointed composition.  Here we pin what remains protective: the manifest
     # enters via the checkpointed scan and no window in the payload
     # stage has an empty partitionSpec.
     check(

@@ -20,20 +20,21 @@ job, a DataFrame with a ``path`` column (e.g. the ingest-maintained
 catalog once and passes the list to every render.  A render resolves its
 matched leaf list ONCE — with ``catalog=None`` one filter over the series
 catalog, at most ``max_points + 1`` rows — and never scans the catalog
-again: the cap arithmetic reads the list's length, the fetch filters the
-datapoints on ``path IN (list)`` plus the ts range (both reach the parquet
-scan), and the dense leaves × slots grid is a JVM-side literal unioned
-into the LWW slot aggregate as null-ordered rows, so it densifies the
-output without a join.  The result is bounded by ``max_points`` like the
-reference's points-per-query cap, so it is collected unsorted and ordered
-on the driver, where the render text is assembled exactly as CGI response
+again: the cap arithmetic reads the list's length, and one ``spark.sql``
+text with the list in it as literals builds the rest: the fetch filters
+the datapoints on ``path IN (list)`` plus the ts range (both reach the
+parquet scan), and the dense leaves × slots grid is unioned into the LWW
+slot aggregate as null-ordered rows, so it densifies the output without a
+join.  The result is bounded by ``max_points`` like the reference's
+points-per-query cap, so it is collected unsorted and ordered on the
+driver, where the render text is assembled exactly as CGI response
 assembly was.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.utils import get_lit_sql_str
 
 from datayours_spark.kernel.timeparse import default_render_range, parse_time
 from datayours_spark.operators.align import apply_null_policy
@@ -43,7 +44,6 @@ from datayours_spark.operators.catalog import (
     find_nodes,
     series_catalog,
 )
-from datayours_spark.operators.fetch import lww_slots, slot_sequence
 from datayours_spark.render.formats import fetched_to_series, render_csv, render_json
 
 
@@ -164,16 +164,21 @@ def render_grid(
     The matched leaves are resolved once: from a ``catalog`` list or
     DataFrame on the driver (:func:`catalog_paths`), or with ``None`` by one
     collect (:func:`~datayours_spark.operators.catalog.collect_leaf_paths`:
-    every target's leaf condition OR-ed into one catalog filter).  The list
-    drives the rest: the fetch filters on ``path IN (list)`` and the ts
-    range, which reach the parquet scan; the dense grid is one literal
-    (``explode`` over the path array, then the slot ``sequence``) unioned
-    into the slot aggregate's input as ``(path, slot, NULL, NULL)`` rows.
-    ``max_by`` skips rows whose ordering is null, so a grid row never beats
-    a real point and a slot with no point comes out null; the ts filter
-    keeps every data slot inside the grid, so the aggregate's output is
-    exactly the grid, with no join.  ``apply_null_policy`` fills the nulls.
-    No target matching a leaf gives an empty (path, slot, value) frame.
+    every target's leaf condition OR-ed into one catalog filter).  The rest
+    is one ``spark.sql`` text (the plan DataFrame calls would build, in a
+    fixed handful of py4j round trips instead of one per call and path):
+    the fetch filters on ``path IN (list)`` and the ts range, which reach
+    the parquet scan; the dense grid (``explode`` over the path array, then
+    the slot ``sequence``) is unioned into the slot aggregate's input as
+    ``(path, slot, NULL, NULL)`` rows.  ``max_by`` skips rows whose
+    ordering is null, so a grid row never beats a real point and a slot
+    with no point comes out null; the ts filter keeps every data slot
+    inside the grid, so the aggregate's output is exactly the grid, with no
+    join.  ``apply_null_policy`` fills the nulls.  No target matching a
+    leaf gives an empty (path, slot, value) frame.  Paths are quoted by
+    Spark's ``Literal.sql`` rule (``get_lit_sql_str``), which assumes
+    ``spark.sql.parser.escapedStringLiterals=false``, as PySpark's
+    formatter does; the engine never sets it.
 
     ``max_points`` bounds the result to len(matched leaves) × slot count —
     the reference's points-per-query guard (`dataMineServer maxpoints`,
@@ -223,20 +228,17 @@ def render_grid(
 
     lo = frm - frm % step
     hi = until - until % step
-    points = datapoints.where(
-        F.col("path").isin(paths) & F.col("ts_sec").between(lo, hi + step - 1)
-    ).select("path", "ts_sec", "ts_us", "value")
-    # the null columns take the points' types in the union
-    grid = spark.range(1).select(F.explode(F.lit(paths)).alias("path")).select(
-        "path",
-        F.explode(slot_sequence(frm, until, step)).alias("ts_sec"),
-        F.lit(None).alias("ts_us"),
-        F.lit(None).alias("value"),
-    )
-    slots = lww_slots(points.unionByName(grid), step)
-    return apply_null_policy(slots, null_policy, partition_cols=["path"]).select(
-        "path", "slot", "value"
-    )
+    in_list = ", ".join(get_lit_sql_str(p) for p in paths)
+    in_list = in_list.replace("{", "{{").replace("}", "}}")  # for the formatter
+    slots = spark.sql(f"""
+        SELECT path, ts_sec - ts_sec % {step}L AS slot, max_by(value, ts_us) AS value
+        FROM (SELECT path, ts_sec, ts_us, value FROM {{points}}
+              WHERE path IN ({in_list}) AND ts_sec BETWEEN {lo}L AND {hi + step - 1}L
+              UNION ALL
+              SELECT path, explode(sequence({lo}L, {hi}L, {step}L)), NULL, NULL
+              FROM (SELECT explode(array({in_list})) AS path))
+        GROUP BY path, slot""", points=datapoints)
+    return apply_null_policy(slots, null_policy, partition_cols=["path"])
 
 
 def render_mixed(

@@ -315,10 +315,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return session_cached(spark, sf_dir, name, "relation", build)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def write_datapoints(datapoints: DataFrame, out_dir: str) -> None:
     """Materialize datapoints in the engine's canonical storage layout:
     parquet partitioned by ``date(ts)``, rows sorted by (path, ts_sec)

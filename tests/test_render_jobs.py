@@ -1,17 +1,22 @@
-"""Spark job counts of /render and /metrics requests (scheduling pins).
+"""Spark job counts of /render and /metrics requests (scheduling pins), and
+the py4j round trips of one render plan build.
 
-Job counts do not depend on host speed, so this catches a serving path that
-starts scanning the catalog again, re-derives the leaves, or adds a
-distributed sort or join — regressions no single timing window can show.
-The session is the suite's ``local[4]`` one with 4 shuffle partitions.
+Job and round-trip counts do not depend on host speed, so this catches a
+serving path that starts scanning the catalog again, re-derives the leaves,
+adds a distributed sort or join, or goes back to one JVM literal per path —
+regressions no single timing window can show.  The session is the suite's
+``local[4]`` one with 4 shuffle partitions.
 """
 
 from __future__ import annotations
 
 import itertools
+import threading
 
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
+from datayours_spark import api
 from datayours_spark.http import GraphiteApp
 from datayours_spark.streaming.ingest import IngestPipeline
 
@@ -23,6 +28,10 @@ RENDER_JOBS = 5
 #: the grid collect alone: LWW view aggregate map, slot aggregate map,
 #: result — the dense grid rides the slot aggregate, so no broadcast job
 FETCH_JOBS = 3
+
+#: py4j commands one render_grid build sends, whatever the leaf count: the
+#: plan is one SQL text with the paths in it as literals
+BUILD_ROUND_TRIPS = 20
 
 RENDER_QS = (
     f"target=a.b%7B1,2%7D.*&target=a.b1.c1&format=json"
@@ -103,3 +112,35 @@ def test_json_render_job_count(spark, tmp_path):
         assert status == "200 OK" and body.count("a.b1.c") == 3, (path, body)
         assert jobs == 0, path
 
+
+def _build_round_trips(spark, datapoints, target: str, catalog: list[str]) -> int:
+    """py4j commands this thread sends while one render_grid builds its plan
+    (a build runs no job).  py4j frees Java objects from a finalizer thread
+    of its own, so frees of earlier calls' objects are not counted."""
+    sent = []
+    send = ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counted(self, command):
+        if threading.get_ident() == me:
+            sent.append(command)
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        api.render_grid(
+            spark, datapoints, target, T0, T0 + 3_600, step=60, catalog=catalog,
+        )
+    finally:
+        ClientServerConnection.send_command = send
+    return len(sent)
+
+
+def test_render_build_round_trips(spark, tmp_path):
+    datapoints = _datapoints(spark, tmp_path)
+    # 51 leaves, 36 of them without a point (all-null series)
+    catalog = [f"a.b{i}.c{j}" for i in range(17) for j in range(3)]
+    _build_round_trips(spark, datapoints, "a.*.*", catalog)  # first-use lookups
+    two = _build_round_trips(spark, datapoints, "a.b1.{c1,c2}", catalog)
+    all_51 = _build_round_trips(spark, datapoints, "a.*.*", catalog)
+    assert two == all_51 <= BUILD_ROUND_TRIPS, (two, all_51)

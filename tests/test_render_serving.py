@@ -1,6 +1,7 @@
 """The served /render path over an appended store: the dense grid unioned
-into the LWW slot aggregate against the left-join form it replaced, and an
-app serving the one snapshot its datapoints relation listed."""
+into the LWW slot aggregate against the left-join form it replaced (also
+over paths the SQL text has to quote), and an app serving the one snapshot
+its datapoints relation listed."""
 
 from __future__ import annotations
 
@@ -111,6 +112,50 @@ class TestDenseGridInAggregate:
         assert self._rows(grid) == self._rows(
             _joined_grid(spark, store, self.PATHS, self.FRM, self.UNTIL, step, "hold")
         )
+
+
+#: paths the SQL text has to quote: a quote, backslashes (one before a
+#: ``u``), braces that the text's formatter reads as fields, non-ASCII
+#: text, and a quote-closing path that naive quoting turns into an
+#: always-true OR
+ODD_PATHS = [
+    "q.it's", "q.dir\\u00e9\\n", "q.{brace}", "q.naïve-日本", "q.x') OR ('1'='1",
+]
+
+
+@pytest.fixture(scope="module")
+def odd_store(spark, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("quoting")
+    _append(spark, str(tmp_path / "out"), 1, [
+        (p, T0 + k * H + 7, float(k)) for k, p in enumerate(ODD_PATHS)
+    ])
+    return _pipe(spark, tmp_path).datapoints()
+
+
+class TestLiteralQuoting:
+    FRM, UNTIL = T0, T0 + 5 * H
+    _rows = staticmethod(TestDenseGridInAggregate._rows)
+
+    @pytest.mark.parametrize("policy", ["null", "zero", "hold", "connected"])
+    def test_matches_left_join(self, spark, odd_store, policy):
+        grid = api.render_grid(
+            spark, odd_store, "q.*", self.FRM, self.UNTIL, step=H, null_policy=policy,
+        )
+        got = self._rows(grid)
+        assert got == self._rows(_joined_grid(
+            spark, odd_store, sorted(ODD_PATHS), self.FRM, self.UNTIL, H, policy,
+        ))
+        values = {(p, s): v for p, s, v in got}
+        assert len(got) == len(ODD_PATHS) * 6
+        assert all(values[(p, T0 + k * H)] == k for k, p in enumerate(ODD_PATHS))
+
+    def test_injection_shaped_target(self, spark, odd_store):
+        target = ODD_PATHS[-1]
+        got = self._rows(api.render_grid(
+            spark, odd_store, target, self.FRM, self.UNTIL, step=H,
+        ))
+        assert {p for p, _, _ in got} == {target}
+        assert len(got) == 6
 
 
 def test_app_serves_its_snapshot(spark, tmp_path):

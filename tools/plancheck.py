@@ -8,7 +8,8 @@ Checks (each prints PASS/FAIL; nonzero exit on any FAIL):
    datapoints layout (io.write_datapoints) scans only the covered dates
    (PartitionFilters on `date`), pushes `path =` and the ts range into the
    parquet scan (PushedFilters), and reads only the needed columns
-   (ReadSchema).
+   (ReadSchema).  A served render over that layout's LWW view pushes its
+   leaf list (`In(path`) and ts range, and plans two exchanges, no join.
 2. **Broadcast joins** — TPC-H Q3's dimension joins broadcast (no
    SortMergeJoin on a small dim side); metadata enrichment broadcasts.
 3. **Partial aggregation** — rollups and LWW slots run map-side partial
@@ -41,7 +42,7 @@ from datayours_spark.sources.events import datapoints_from_events
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "tests", "_tmp", "plancheck_datapoints")
+                   "tests", "_tmp", "plancheck", "datapoints")
 
 failures: list[str] = []
 
@@ -97,6 +98,47 @@ def main() -> None:
         "scan clipped to covered date partitions",
         bool(re.search(r"PartitionFilters: \[[^\]]*date#\d+ >=", plan))
         and bool(re.search(r"PartitionFilters: \[[^\]]*date#\d+ <=", plan)),
+    )
+
+    # ---- 1b. served render: one SQL text, the dense grid in the aggregate --
+    # q_render_api derives its paths from the events table, so no path
+    # filter can reach its scan: it pins the shape (the slot aggregate's
+    # one exchange, no join).  The same render over the stored layout's
+    # LWW view (IngestPipeline.datapoints, what an app serves) must push
+    # the leaf list and the ts range into the scan and plan two exchanges
+    # (the LWW view's and the slot aggregate's), still without a join.
+    def n_exchanges(plan: str) -> int:
+        return len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M))
+
+    plan = plan_of(entrymod.queries()["q_render_api"](spark, SF_DIR))
+    check(
+        "q_render_api: one exchange, no join",
+        n_exchanges(plan) == 1 and "Join" not in plan,
+        f"{n_exchanges(plan)} exchanges",
+    )
+    from datayours_spark import api
+    from datayours_spark.streaming.ingest import IngestPipeline
+
+    base = os.path.dirname(TMP)
+    lww = IngestPipeline(
+        spark=spark, input_dir=f"{base}/in", output_dir=base,
+        checkpoint_dir=f"{base}/ckpt",
+    ).datapoints()
+    plan = plan_of(api.render_grid(
+        spark, lww, entrymod.RENDER_API_TARGET, entrymod.FETCH_FROM,
+        t0 + 3 * entrymod.DAY, step=entrymod.RENDER_API_STEP, null_policy="zero",
+    ))
+    # whole lines: the In list's own brackets end a `[^\]]*` match early
+    pushed = " ".join(re.findall(r"PushedFilters: (.*)", plan))
+    check(
+        "served render pushes the leaf list and ts range into the scan",
+        "In(path" in pushed and "GreaterThanOrEqual(ts_sec" in pushed,
+        f"PushedFilters: {pushed[:120]}",
+    )
+    check(
+        "served render: two exchanges, no join",
+        n_exchanges(plan) == 2 and "Join" not in plan,
+        f"{n_exchanges(plan)} exchanges",
     )
 
     # ---- 2. broadcast joins ---------------------------------------------
